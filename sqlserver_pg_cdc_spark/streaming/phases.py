@@ -5,9 +5,9 @@ The ingest gates are the most expensive rows in the bench series
 regression in one of them should name its PHASE without a profiling
 session. Each gate ``__call__`` records the wall time of its sections
 through a :class:`PhaseRecorder` and folds them into a per-class
-accumulator; ``bench.py`` resets the accumulator before a timed run and
-publishes the snapshot as ``gate_phase_s`` in the bench JSON
-(r8 verdict #7 — the SCALE.md decomposition, now structured per round).
+accumulator; a caller resets the accumulator before a timed run and
+reads the snapshot afterwards (``cli pipeline`` publishes it as
+``stage_wall_s``).
 
 Time lands on the phase whose section ran the Spark ACTION — lazy
 transformations built in one section but executed in a later one count
