@@ -56,29 +56,50 @@ _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FLOAT_TYPES = (T.FloatType, T.DoubleType)
 
 
-def canon_col(col: Column | str, dtype: T.DataType) -> Column:
-    """Canonical-string expression for one column (NULL -> "NULL")."""
-    c = F.col(col) if isinstance(col, str) else col
+def quote(name: str, qualifier: str = "") -> str:
+    """Backtick-quoted Spark SQL identifier, optionally ``qualifier.``-prefixed."""
+    q = "`" + name.replace("`", "``") + "`"
+    return f"{qualifier}.{q}" if qualifier else q
+
+
+def sql_string(value: str) -> str:
+    """Spark SQL string literal (backslash escapes are the parser default)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def canon_expr(expr: str, dtype: T.DataType) -> str:
+    """Spark SQL text of the canonical string of ``expr`` (NULL -> "NULL").
+
+    ``expr`` is itself Spark SQL text: a quoted column, or an aggregate
+    such as ``min(`c`)``. Building the whole row expression as text costs
+    one parse instead of a py4j round trip per function call.
+    """
     if isinstance(dtype, T.StringType):
-        s = c
+        s = expr
     elif isinstance(dtype, _INT_TYPES) or isinstance(dtype, T.BooleanType):
-        s = c.cast("string")
+        s = f"CAST({expr} AS STRING)"
     elif isinstance(dtype, _FLOAT_TYPES):
-        s = c.cast(_FLOAT_DECIMAL).cast("string")
+        s = f"CAST(CAST({expr} AS {_FLOAT_DECIMAL}) AS STRING)"
     elif isinstance(dtype, T.DecimalType):
-        s = c.cast("string")
+        s = f"CAST({expr} AS STRING)"
     elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         # NTZ: session TZ is pinned to UTC, so the cast is shift-free and
         # unix_micros matches DuckDB's epoch_us on the naive value.
-        s = F.unix_micros(c.cast("timestamp")).cast("string")
+        s = f"CAST(unix_micros(CAST({expr} AS TIMESTAMP)) AS STRING)"
     elif isinstance(dtype, T.DateType):
-        s = F.datediff(c, F.lit("1970-01-01").cast("date")).cast("string")
+        s = f"CAST(datediff({expr}, DATE'1970-01-01') AS STRING)"
     elif isinstance(dtype, T.BinaryType):
-        s = F.hex(c)
+        s = f"hex({expr})"
     else:
         # structured types (array/map/struct): stable JSON rendering
-        s = F.to_json(c)
-    return F.coalesce(s, F.lit(NULL_TOKEN))
+        s = f"to_json({expr})"
+    return f"coalesce({s}, '{NULL_TOKEN}')"
+
+
+def canon_col(expr: str, dtype: T.DataType) -> Column:
+    """Canonical-string column for one Spark SQL expression, e.g. a column
+    name or ``min(c)``."""
+    return F.expr(canon_expr(expr, dtype))
 
 
 def canon_sql(col: str, dtype: T.DataType, qualifier: str = "") -> str:
@@ -161,15 +182,25 @@ def _resolve_fields(df: DataFrame, cols: list[str] | None) -> list[tuple[str, T.
     return [(n, by_name[n]) for n in names]
 
 
+def row_canonical_expr(fields: list[tuple[str, T.DataType]], qualifier: str = "") -> str:
+    """Spark SQL text of the '|'-joined canonical row string."""
+    parts = ", ".join(canon_expr(quote(n, qualifier), t) for n, t in fields)
+    return f"concat_ws('{SEP}', {parts})"
+
+
+def row_hash_expr(fields: list[tuple[str, T.DataType]], qualifier: str = "") -> str:
+    """Spark SQL text of the per-row md5 hex fingerprint."""
+    return f"md5({row_canonical_expr(fields, qualifier)})"
+
+
 def row_canonical(df: DataFrame, cols: list[str] | None = None) -> Column:
     """'|'-joined canonical row string (column order = ``cols`` order)."""
-    fields = _resolve_fields(df, cols)
-    return F.concat_ws(SEP, *[canon_col(n, t) for n, t in fields])
+    return F.expr(row_canonical_expr(_resolve_fields(df, cols)))
 
 
 def row_hash(df: DataFrame, cols: list[str] | None = None) -> Column:
     """Per-row md5 hex fingerprint over the canonical row string."""
-    return F.md5(row_canonical(df, cols))
+    return F.expr(row_hash_expr(_resolve_fields(df, cols)))
 
 
 def row_hash_sql(fields: list[tuple[str, T.DataType]], qualifier: str = "") -> str:
@@ -178,37 +209,21 @@ def row_hash_sql(fields: list[tuple[str, T.DataType]], qualifier: str = "") -> s
     return f"md5(concat_ws('{SEP}', {parts}))"
 
 
-def null_safe_equal(
-    left: Column,
-    right: Column,
+def null_safe_equal_sql(
+    left: str,
+    right: str,
     dtype: T.DataType,
-    float_tol: float = 1e-9,
+    float_tol: float | None = 1e-9,
     trim_strings: bool = True,
-) -> Column:
-    """Reference-compatible column equality (F13-F15).
+) -> str:
+    """Reference-compatible column equality (F13-F15) as SQL text that
+    Spark and DuckDB parse alike, so the diff and its oracle share one rule.
 
     - NULL == NULL is equal; NULL vs value differs (reconciler.py:394-400)
     - floats equal when |l-r| < float_tol (reconciler.py:402-406)
     - strings equal when they differ only by leading/trailing whitespace
       (reconciler.py:409-416)
     """
-    if isinstance(dtype, _FLOAT_TYPES) and float_tol is not None:
-        both_null = left.isNull() & right.isNull()
-        both_set = left.isNotNull() & right.isNotNull()
-        return both_null | (both_set & (F.abs(left - right) < F.lit(float_tol)))
-    if isinstance(dtype, T.StringType) and trim_strings:
-        return F.trim(left).eqNullSafe(F.trim(right))
-    return left.eqNullSafe(right)
-
-
-def null_safe_equal_sql(
-    left: str,
-    right: str,
-    dtype: T.DataType,
-    float_tol: float = 1e-9,
-    trim_strings: bool = True,
-) -> str:
-    """DuckDB fragment matching null_safe_equal."""
     if isinstance(dtype, _FLOAT_TYPES) and float_tol is not None:
         return (
             f"(({left} IS NULL AND {right} IS NULL) OR "

@@ -21,6 +21,11 @@ We make the order-insensitive family the engine default, in two modes:
 
 The order-sensitive fold (A2) is provided as ``ordered_checksum`` — a
 documented slow path that streams ordered partitions through the driver.
+
+The commutative digest is built as Spark SQL text (``chunk_exprs`` splits
+a row hash, ``digest_expr`` sums and folds it). ``runner.reconcile_table``
+uses the same two helpers inside its one per-table audit query, gated to
+one side's rows, so its checksums equal ``table_checksum``'s byte for byte.
 """
 
 from __future__ import annotations
@@ -30,7 +35,9 @@ from pyspark.sql import functions as F
 
 from sqlserver_pg_cdc_spark.functions.canonical import (
     _resolve_fields,
+    row_canonical_expr,
     row_hash,
+    row_hash_expr,
     row_hash_sql,
 )
 
@@ -38,8 +45,25 @@ from sqlserver_pg_cdc_spark.functions.canonical import (
 _CHUNKS = [(1, 15), (16, 15), (31, 2)]
 
 
-def _hash_col(df: DataFrame, cols: list[str] | None):
-    return row_hash(df, cols).alias("__rh")
+def chunk_exprs(rh: str) -> list[str]:
+    """Spark SQL text splitting the md5 hex column ``rh`` into its integer
+    chunks (BIGINT: 8 bytes per chunk through a shuffle, not 32 chars)."""
+    return [f"CAST(conv(substring({rh}, {pos}, {ln}), 16, 10) AS BIGINT)" for pos, ln in _CHUNKS]
+
+
+def digest_expr(chunks: list[str], gate: str | None = None) -> str:
+    """Spark SQL text of the commutative checksum aggregate over the rows
+    where ``gate`` holds (all rows without one): the exact decimal SUM of
+    each chunk and the row count, folded into one md5 hex digest. The
+    fused audit (runner.reconcile_table) and ``table_checksum`` both use
+    it, so their digests are byte-identical."""
+    if gate:
+        chunks = [f"CASE WHEN {gate} THEN {c} END" for c in chunks]
+    sums = ", ".join(
+        f"coalesce(CAST(sum(CAST({c} AS DECIMAL(38,0))) AS STRING), '0')" for c in chunks
+    )
+    count = f"count_if({gate})" if gate else "count(1)"
+    return f"md5(concat_ws('|', {sums}, CAST({count} AS STRING)))"
 
 
 def table_checksum(
@@ -49,52 +73,27 @@ def table_checksum(
 
     Order-insensitive: any row permutation yields the same digest.
     """
-    hashed = df.select(_hash_col(df, cols))
+    fields = _resolve_fields(df, cols)
     if mode == "sorted":
-        agg = hashed.agg(
-            F.md5(F.concat_ws("", F.sort_array(F.collect_list("__rh")))).alias("checksum"),
-            F.count(F.lit(1)).alias("row_count"),
+        return df.selectExpr(f"{row_hash_expr(fields)} AS __rh").selectExpr(
+            "md5(concat_ws('', sort_array(collect_list(__rh)))) AS checksum",
+            "count(1) AS row_count",
         )
-        return agg
     if mode == "fast":
         # 100 TB path: xxhash64 (JVM-native, no hex strings) summed as
         # decimal — cheapest possible one-pass commutative digest. No
         # DuckDB oracle (xxhash64 has no cross-engine twin); validated by
         # determinism/permutation/avalanche properties instead.
-        from sqlserver_pg_cdc_spark.functions.canonical import row_canonical
-
-        h = F.xxhash64(row_canonical(df, cols)).cast("decimal(38,0)")
-        partial = df.select(h.alias("__xh")).agg(
-            F.sum("__xh").alias("__s"), F.count(F.lit(1)).alias("row_count")
-        )
-        return partial.select(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.coalesce(F.col("__s").cast("string"), F.lit("0")),
-                    F.col("row_count").cast("string"),
-                )
-            ).alias("checksum"),
-            "row_count",
+        xh = f"CAST(xxhash64({row_canonical_expr(fields)}) AS DECIMAL(38,0))"
+        return df.selectExpr(f"{xh} AS __xh").selectExpr(
+            "md5(concat_ws('|', coalesce(CAST(sum(__xh) AS STRING), '0'), "
+            "CAST(count(1) AS STRING))) AS checksum",
+            "count(1) AS row_count",
         )
     if mode != "commutative":
         raise ValueError(f"unknown checksum mode: {mode}")
-    sums = [
-        F.sum(F.conv(F.substring("__rh", pos, ln), 16, 10).cast("decimal(38,0)"))
-        .cast("string")
-        .alias(f"__s{i}")
-        for i, (pos, ln) in enumerate(_CHUNKS)
-    ]
-    partial = hashed.agg(*sums, F.count(F.lit(1)).alias("row_count"))
-    return partial.select(
-        F.md5(
-            F.concat_ws(
-                "|",
-                *[F.coalesce(F.col(f"__s{i}"), F.lit("0")) for i in range(len(_CHUNKS))],
-                F.col("row_count").cast("string"),
-            )
-        ).alias("checksum"),
-        "row_count",
+    return df.selectExpr(f"{row_hash_expr(fields)} AS __rh").selectExpr(
+        f"{digest_expr(chunk_exprs('__rh'))} AS checksum", "count(1) AS row_count"
     )
 
 

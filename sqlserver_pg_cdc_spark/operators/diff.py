@@ -15,7 +15,9 @@ At 100 TB the join co-partitions both sides by PK; if one side is small
 Catalyst/AQE broadcasts it automatically.
 
 Comparison semantics match the reference: NULL==NULL equal, float
-tolerance 1e-9, whitespace-insensitive strings (F13-F15).
+tolerance 1e-9, whitespace-insensitive strings (F13-F15). The rule is
+``null_safe_equal_sql``, SQL text that the Spark plan and the DuckDB
+oracle share.
 """
 
 from __future__ import annotations
@@ -25,8 +27,9 @@ from pyspark.sql import functions as F
 
 from sqlserver_pg_cdc_spark.functions.canonical import (
     _resolve_fields,
-    null_safe_equal,
     null_safe_equal_sql,
+    quote,
+    sql_string,
 )
 
 MISSING = "MISSING"
@@ -38,6 +41,22 @@ def _compare_fields(df: DataFrame, pk_cols: list[str], compare_cols: list[str] |
     fields = _resolve_fields(df, compare_cols)
     pk = set(pk_cols)
     return [(n, t) for n, t in fields if n not in pk]
+
+
+def modified_columns_expr(fields, float_tol: float | None = 1e-9, trim_strings: bool = True) -> str:
+    """Spark SQL text of the schema-ordered array of the compared columns
+    whose ``s.``/``t.`` values differ on a joined row (empty when equal).
+    ``diff_tables`` and the fused audit in runner.reconcile_table classify
+    MODIFIED rows with it."""
+    if not fields:
+        return "CAST(array() AS ARRAY<STRING>)"
+    whens = ", ".join(
+        "CASE WHEN NOT "
+        f"{null_safe_equal_sql(quote(c, 's'), quote(c, 't'), dt, float_tol, trim_strings)} "
+        f"THEN {sql_string(c)} END"
+        for c, dt in fields
+    )
+    return f"array_compact(array({whens}))"
 
 
 def diff_tables(
@@ -60,50 +79,35 @@ def diff_tables(
     struct for the absent side) — the input for repair-script generation.
     """
     fields = _compare_fields(source, pk_cols, compare_cols)
-    s = source.select(
-        *pk_cols, *[c for c, _ in fields], F.lit(1).alias("__s_present")
-    ).alias("s")
-    t = target.select(
-        *pk_cols, *[c for c, _ in fields], F.lit(1).alias("__t_present")
-    ).alias("t")
-
+    cols = [quote(c) for c in pk_cols] + [quote(c) for c, _ in fields]
+    s = source.selectExpr(*cols, "1 AS __s_present").alias("s")
+    t = target.selectExpr(*cols, "1 AS __t_present").alias("t")
     joined = s.join(t, pk_cols, "full_outer")
 
-    modified_cols = F.array_compact(
-        F.array(
-            *[
-                F.when(
-                    ~null_safe_equal(
-                        F.col(f"s.{c}"), F.col(f"t.{c}"), dt, float_tol, trim_strings
-                    ),
-                    F.lit(c),
-                )
-                for c, dt in fields
-            ]
-        )
+    pks = [quote(c) for c in pk_cols]
+    values = []
+    if include_values:
+        for side, present in (("s", "__s_present"), ("t", "__t_present")):
+            named = ", ".join(f"{sql_string(c)}, {quote(c, side)}" for c, _ in fields)
+            struct = f"named_struct({named})" if fields else "struct()"
+            values.append(
+                f"CASE WHEN {side}.{present} IS NOT NULL THEN {struct} END AS {side}_data"
+            )
+    classified = joined.selectExpr(
+        *pks,
+        f"CASE WHEN t.__t_present IS NULL THEN '{MISSING}' "
+        f"WHEN s.__s_present IS NULL THEN '{EXTRA}' END AS __absent",
+        f"{modified_columns_expr(fields, float_tol, trim_strings)} AS __mods",
+        *values,
     )
-    diff_type = (
-        F.when(F.col("t.__t_present").isNull(), F.lit(MISSING))
-        .when(F.col("s.__s_present").isNull(), F.lit(EXTRA))
-        .when(F.size(modified_cols) > 0, F.lit(MODIFIED))
-    )
-    out_cols = [
-        *pk_cols,
-        diff_type.alias("diff_type"),
-        F.when(diff_type == MODIFIED, F.concat_ws(",", modified_cols))
-        .otherwise(F.lit(""))
-        .alias("modified_columns"),
+    out = [
+        *pks,
+        f"coalesce(__absent, CASE WHEN size(__mods) > 0 THEN '{MODIFIED}' END) AS diff_type",
+        "CASE WHEN __absent IS NULL THEN concat_ws(',', __mods) ELSE '' END AS modified_columns",
     ]
     if include_values:
-        s_struct = F.struct(*[F.col(f"s.{c}").alias(c) for c, _ in fields])
-        t_struct = F.struct(*[F.col(f"t.{c}").alias(c) for c, _ in fields])
-        out_cols.append(
-            F.when(F.col("s.__s_present").isNotNull(), s_struct).alias("source_data")
-        )
-        out_cols.append(
-            F.when(F.col("t.__t_present").isNotNull(), t_struct).alias("target_data")
-        )
-    return joined.select(*out_cols).filter(F.col("diff_type").isNotNull())
+        out += ["s_data AS source_data", "t_data AS target_data"]
+    return classified.selectExpr(*out).filter("diff_type IS NOT NULL")
 
 
 def diff_tables_sql(

@@ -25,7 +25,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sqlserver_pg_cdc_spark.functions.canonical import canon_col, canon_sql
+from sqlserver_pg_cdc_spark.functions.canonical import canon_col, canon_sql, quote
 
 
 def _result(df: DataFrame, check: str, column: str, violations: Column) -> DataFrame:
@@ -124,8 +124,8 @@ def profile_table(
         aggs.extend(
             [
                 F.count_if(c.isNull()).cast("long").alias(f"__nn{i}"),
-                canon_col(F.min(c), dtype).alias(f"__mn{i}"),
-                canon_col(F.max(c), dtype).alias(f"__mx{i}"),
+                canon_col(f"min({quote(name)})", dtype).alias(f"__mn{i}"),
+                canon_col(f"max({quote(name)})", dtype).alias(f"__mx{i}"),
             ]
         )
         if distinct == "approx":

@@ -99,6 +99,18 @@ def test_reconcile_table_emits_phase_spans(spark):
     assert len(children) >= 2
     tr.clear()
 
+    # with a row-level diff all three phases get a span under the table's
+    # root, though one query answers them all
+    res = reconcile_table(df, df.filter("pk < 8"), "t2", pk_cols=["pk"],
+                          validate_checksums=True, row_level=True)
+    assert res["row_level"] == {"missing": 2, "extra": 0, "modified": 0}
+    spans = [json.loads(line) for line in tr.export_json_lines()]
+    root = [s for s in spans if s["name"] == "reconcile_table"][0]
+    phases = {s["name"]: s for s in spans if s["parent_id"] == root["span_id"]}
+    assert set(phases) == {"count_comparison", "checksum_comparison", "row_level_diff"}
+    assert all(s["attributes"]["table"] == "t2" for s in phases.values())
+    tr.clear()
+
 
 # --- OTLP/HTTP wire export ---------------------------------------------------
 
