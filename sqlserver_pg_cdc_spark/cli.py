@@ -73,8 +73,9 @@ def create_parser() -> argparse.ArgumentParser:
                         help="bound each micro-batch (max.batch.size parity)")
     stream.add_argument("--partitions", type=int, default=0,
                         help="hash-partition the parquet target into N "
-                             "part_NNNNN/ dirs; a batch rewrites only the "
-                             "partitions it touches (0 = flat table)")
+                             "partitions; a batch rewrites only the "
+                             "partitions it touches and commits them as "
+                             "one manifest version (0 = flat table)")
     stream.add_argument("--transactional", action="store_true",
                         help="apply source transactions all-or-nothing "
                              "(provide.transaction.metadata parity)")
@@ -2081,32 +2082,30 @@ def cmd_pipeline(args) -> int:
 
 def cmd_state(args) -> int:
     """Day-2 maintenance: open the partitioned state with the partition
-    count recorded in its own __layout.json (never guessed from a
-    flag — a wrong count would mis-route every key), then purge and/or
-    rescale."""
-    import os
-
+    count its latest committed manifest version records (never guessed
+    from a flag — a wrong count would mis-route every key), then purge
+    and/or rescale."""
     from sqlserver_pg_cdc_spark.session import get_spark
     from sqlserver_pg_cdc_spark.streaming.apply import (
         PartitionedParquetUpsertSink,
     )
 
-    marker = os.path.join(args.state_dir, "__layout.json")
-    if not os.path.exists(marker):
+    n_current = PartitionedParquetUpsertSink.committed_partitions(
+        args.state_dir
+    )
+    if n_current is None:
         raise SystemExit(
-            f"{args.state_dir} has no __layout.json — not a partitioned "
-            "sink state (or the marker was lost; restore it first)"
+            f"{args.state_dir} has no committed _log/ manifest — not a "
+            "partitioned sink state"
         )
-    with open(marker) as f:
-        n_current = json.load(f)["n_partitions"]
     spark = get_spark("state-cli")
-    result = {"state_dir": args.state_dir, "n_partitions": int(n_current)}
+    result = {"state_dir": args.state_dir, "n_partitions": n_current}
     if args.scd2_prune_watermark is not None:
         from sqlserver_pg_cdc_spark.streaming.scd2 import PartitionedScd2Sink
 
         hist = PartitionedScd2Sink(
             spark, args.state_dir, list(args.pk),
-            lsn_col=args.lsn_col, n_partitions=int(n_current),
+            lsn_col=args.lsn_col, n_partitions=n_current,
         )
         result["prune"] = hist.prune_history(args.scd2_prune_watermark)
         if args.rescale is not None:
@@ -2119,7 +2118,7 @@ def cmd_state(args) -> int:
         return 0
     sink = PartitionedParquetUpsertSink(
         spark, args.state_dir, list(args.pk),
-        lsn_col=args.lsn_col, n_partitions=int(n_current),
+        lsn_col=args.lsn_col, n_partitions=n_current,
     )
     if args.purge_watermark is not None:
         result["purge"] = sink.purge_tombstones(

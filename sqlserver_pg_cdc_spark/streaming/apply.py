@@ -23,12 +23,17 @@ upsert — swap the sink, keep the semantics.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
 import shutil
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 OP_COL = "__op"
 DELETED_COL = "__deleted"
@@ -417,7 +422,7 @@ class ParquetUpsertSink:
             with get_tracer().span(
                 "cdc_apply_batch", batch_id=batch_id, target=self.target_dir
             ):
-                self._apply(batch_df)
+                self._apply(batch_df, batch_id)
         except Exception as e:  # St10: error routing, not query death
             if self.dlq_dir is None:
                 raise
@@ -429,729 +434,319 @@ class ParquetUpsertSink:
                 .parquet(self.dlq_dir)
             )
 
-    def _apply(self, batch_df: DataFrame) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         merged = merge_upsert(
             self.read_target(), batch_df, self.pk_cols, self.lsn_col
         )
         self._swap_in(merged, self.target_dir)
 
 
-class HashPartitionedStateMixin:
-    """Hash-partitioned on-disk state shared by the partitioned sinks
-    (`PartitionedParquetUpsertSink` here,
-    `streaming/rollup.PartitionedContinuousAggSink`): state lives in
-    ``n_partitions`` independent ``part_NNNNN/`` subdirectories keyed by
-    ``pmod(xxhash64(*pk_cols), n_partitions)``, each with the
-    generation-swap crash-recovery discipline of the base sink scoped to
-    one partition directory. Expects ``spark``, ``target_dir``,
-    ``pk_cols``, ``n_partitions``, and ``_generations`` on self."""
+LOG_DIR = "_log"
+_VERSION_RE = re.compile(r"\d{20}\.json")
 
-    _LAYOUT_FILE = "__layout.json"
 
-    def _check_layout(self, create: bool = False) -> None:
-        """Guard the on-disk layout: the state dir must be a
-        part_NNNNN/ hash layout with THIS sink's n_partitions.
+def _manifest_sha(body: dict) -> str:
+    """sha256 over a manifest body, its own ``sha256`` field excluded."""
+    blob = json.dumps(
+        {k: v for k, v in body.items() if k != "sha256"}, sort_keys=True
+    ).encode()
+    return hashlib.sha256(blob).hexdigest()
 
-        Without this, pointing a partitioned sink at an existing
-        non-partitioned state dir silently ignores all prior state (no
-        part_* subdirs found), and reopening with a different
-        n_partitions mis-assigns keys so one key can live in two
-        partitions — reads would then emit duplicate rows. Fail fast on
-        both instead: a JSON marker records n_partitions on first use
-        and is validated on every open."""
-        import json
 
-        if not os.path.isdir(self.target_dir):
-            return
-        marker = os.path.join(self.target_dir, self._LAYOUT_FILE)
-        if os.path.exists(marker):
-            with open(marker) as f:
-                meta = json.load(f)
-            if meta.get("n_partitions") != self.n_partitions:
-                raise ValueError(
-                    f"partitioned state at {self.target_dir} was "
-                    f"written with n_partitions={meta.get('n_partitions')}; "
-                    f"this sink uses {self.n_partitions} — reopening with a "
-                    "different partition count would mis-assign keys"
-                )
-            # schema-stamp integrity (r8 verdict #8): a marker carrying a
-            # schema whose sha256 does not cover it was hand-edited or
-            # corrupted — refuse adoption instead of letting operators
-            # trust a stamp that no write produced. Markers stamped
-            # before the hash existed (no schema_sha256 field) pass and
-            # are upgraded by the next write's _stamp_schema.
-            if "schema_sha256" in meta and meta["schema_sha256"] != (
-                self._schema_sha(
-                    meta.get("schema", {}), meta.get("schema_version", 0)
-                )
-            ):
-                raise ValueError(
-                    f"layout marker at {self.target_dir} carries a schema "
-                    "stamp whose hash does not match its contents — the "
-                    "marker was tampered with or corrupted; restore it "
-                    "from the part footers (mergeSchema read) or rebuild"
-                )
-            return
-        loose = [
-            n
-            for n in os.listdir(self.target_dir)
-            if os.path.isfile(os.path.join(self.target_dir, n))
-            and (n.endswith(".parquet") or n == "_SUCCESS")
-        ]
-        if loose:
-            raise ValueError(
-                f"state dir {self.target_dir} holds a NON-partitioned "
-                "table (loose parquet files at the root); refusing to "
-                "silently ignore it — use the non-partitioned sink for "
-                "this state, or migrate it into part_NNNNN/ subdirectories"
-            )
-        # Markerless state that already holds part_* dirs cannot be
-        # adopted: the marker is written BEFORE the first partition dir
-        # is ever created, so its absence means the dirs were built by
-        # something else (or the marker was deleted) and their
-        # n_partitions is unknowable — stamping the CURRENT count could
-        # mis-assign keys so one key lives in two partitions.
-        if self._existing_parts():
-            raise ValueError(
-                f"state dir {self.target_dir} holds part_* directories "
-                "but no __layout.json marker — its partition count is "
-                "unknown and adopting it could split keys across "
-                "partitions; restore the marker (with the count the "
-                "state was built with) or rebuild the state"
-            )
-        if create:
-            with open(marker, "w") as f:
-                json.dump({"n_partitions": self.n_partitions}, f)
-
-    # -- day-2 maintenance ---------------------------------------------------
-
-    def _tombstone_flag(self, df: DataFrame, deleted_col: str | None):
-        """Boolean tombstone predicate over stored state, NULL-safe.
-
-        The index sinks store a boolean ``__del``; the CDC pipeline
-        keeps Debezium's string ``__deleted``. When ``deleted_col`` is
-        None, whichever of the two the state carries is used."""
-        col = deleted_col
-        if col is None:
-            col = (
-                "__del"
-                if "__del" in df.columns
-                else ("__deleted" if "__deleted" in df.columns else None)
-            )
-        if col is None:
+def read_manifest(state_dir: str) -> dict | None:
+    """The latest committed version of a hash-partitioned state, or
+    None before the first commit. ``<state>/_log/<version:020d>.json``
+    holds ``n_partitions``, the schema as Spark's JSON ``StructType``,
+    one generation directory per partition (``part_NNNNN.v<version>-
+    <token>``), the highest ``batch_id`` merged and a sha256 over the
+    body, which is checked. Lists ``_log/``, opens one file, modifies
+    nothing."""
+    log = os.path.join(state_dir, LOG_DIR)
+    while True:
+        try:
+            names = [n for n in os.listdir(log) if _VERSION_RE.fullmatch(n)]
+        except (FileNotFoundError, NotADirectoryError):
             return None
-        c = F.col(col)
-        flag = c if dict(df.dtypes).get(col) == "boolean" else (
-            F.lower(c.cast("string")) == F.lit("true")
-        )
-        return F.coalesce(flag, F.lit(False))
-
-    def purge_tombstones(
-        self, watermark_lsn, deleted_col: str | None = None
-    ) -> dict:
-        """Physically drop soft-deleted rows whose LSN is at or below
-        ``watermark_lsn``.
-
-        Tombstones must OUTLIVE the source's replay horizon — the LSN
-        guard needs them to stop a stale pre-delete update from
-        resurrecting the row — but past that horizon they are dead
-        weight the state carries forever (at CDC scale, every deleted
-        key ever). The reference bounds the same liability with
-        retention: change events are kept 7 days
-        (docs/development-architecture.md:226) and SQL Server's CDC
-        capture itself truncates at ``@retention``
-        (docs/troubleshooting-part01.md:194-197); this is the
-        state-side twin of that policy. The CALLER owns the watermark
-        contract: pass an LSN the source can no longer replay at or
-        below (e.g. the checkpointed read position minus the retention
-        window). Tombstones ABOVE the watermark are kept and the guard
-        still holds for them.
-
-        One O(state) pass, like any retention compaction: reads every
-        partition once, rewrites only the partitions that actually held
-        purgeable rows (generation swap each — crash-safe, and a reader
-        mid-purge sees whole partitions, never half). Returns
-        ``{"purged": n, "partitions_rewritten": k}``.
-
-        Post-full-purge contract: a state that was ENTIRELY
-        past-horizon tombstones ends with zero ``part_*`` directories
-        (the layout marker stays); ``read_target()`` then returns
-        ``None``, indistinguishable from a never-written state, and the
-        next upsert bootstraps it cleanly. Callers of ``read_target()``
-        after a purge must handle ``None``.
-
-        Concurrency: run on a QUIESCED state (no concurrent upsert
-        batches), like :meth:`rescale`. The stats pass and the rewrite
-        pass deliberately re-read the partition files (the frame is
-        state-sized, so pinning it in executor storage is exactly the
-        liability this op exists to shrink); a concurrent foreachBatch
-        swapping a partition between the two passes would be silently
-        overwritten with this op's stale snapshot. Single writer only —
-        ENFORCED since round 10: the pass holds the create-exclusive
-        ``__maintenance.lock`` sentinel (`streaming/lock.py`), and the
-        partitioned sinks fail fast while it is held; a crashed pass
-        leaves a lock that reads stale by pid/timestamp and is broken
-        on the next open."""
-        from sqlserver_pg_cdc_spark.streaming.lock import maintenance_lock
-
-        with maintenance_lock(self.target_dir, "purge_tombstones"):
-            return self._purge_tombstones_locked(watermark_lsn, deleted_col)
-
-    def _purge_tombstones_locked(
-        self, watermark_lsn, deleted_col: str | None = None
-    ) -> dict:
-        self._check_layout()
-        st = self.read_target()
-        if st is None:
-            return {"purged": 0, "partitions_rewritten": 0}
-        flag = self._tombstone_flag(st, deleted_col)
-        if flag is None:
-            return {"purged": 0, "partitions_rewritten": 0}
-        wm = F.lit(watermark_lsn).cast(dict(st.dtypes)[self.lsn_col])
-        # coalesce: a NULL lsn makes the comparison NULL, which the keep
-        # filter and the stats pass would then classify differently —
-        # pin it to "not purgeable" everywhere
-        dead = F.coalesce(flag & (F.col(self.lsn_col) <= wm), F.lit(False))
-        # deliberately NOT cached/checkpointed: the frame is STATE-sized
-        # (pinning it in executor storage is exactly the liability this
-        # op exists to shrink) and its plan is a plain parquet scan, so
-        # the three passes below just re-read the partition files
-        routed = st.withColumn("__p", self._part_expr()).withColumn(
-            "__dead", dead
-        )
-        stats = (
-            routed.groupBy("__p")
-            .agg(
-                F.sum(F.col("__dead").cast("long")).alias("__dead_n"),
-                F.count(F.lit(1)).alias("__tot"),
+        if not names:
+            return None
+        try:
+            with open(os.path.join(log, max(names))) as f:
+                body = json.load(f)
+        except FileNotFoundError:
+            continue  # pruned by a commit between the list and the open
+        if body.get("sha256") != _manifest_sha(body):
+            raise ValueError(
+                f"manifest {max(names)} of {state_dir} carries a sha256 "
+                "that does not match its body — it was tampered with or "
+                "corrupted; restore it or rebuild the state"
             )
-            .collect()
-        )
-        hit = sorted(r["__p"] for r in stats if r["__dead_n"] > 0)
-        if not hit:
-            return {"purged": 0, "partitions_rewritten": 0}
-        purged = sum(r["__dead_n"] for r in stats)
-        # partitions left with no live rows after the purge: their old
-        # dir must go entirely (computed from the SAME pre-swap pass —
-        # post-swap the original files are gone)
-        emptied = {
-            r["__p"]
-            for r in stats
-            if r["__dead_n"] > 0 and r["__tot"] == r["__dead_n"]
+        return body
+
+
+def _union_schema(prev: dict | None, schema) -> dict:
+    """Additive evolution: the previous JSON ``StructType`` plus the
+    fields of ``schema`` it lacks (a type change never gets here — the
+    merge raises and the batch goes to the DLQ)."""
+    new = schema.jsonValue()
+    if prev is None:
+        return new
+    have = {f["name"] for f in prev["fields"]}
+    return {
+        **prev,
+        "fields": prev["fields"]
+        + [f for f in new["fields"] if f["name"] not in have],
+    }
+
+
+class HashPartitionedStateMixin:
+    """Hash-partitioned state shared by `PartitionedParquetUpsertSink`,
+    `scd2.PartitionedScd2Sink` and `rollup.PartitionedContinuousAggSink`:
+    ``n_partitions`` partitions keyed by ``pmod(xxhash64(*pk_cols), n)``,
+    whose live files an append-only manifest names (``_log/``, see
+    :func:`read_manifest`; Delta Lake's transaction log, Armbrust et al.,
+    VLDB 2020). Every batch and maintenance pass reads one snapshot and
+    commits one version through :meth:`_commit`, so a reader sees a
+    whole batch or none of it. Readers scan exactly the latest version's
+    directories and rename, sweep and delete nothing; whatever it does
+    not name is debris of a crashed attempt, removed by the next commit
+    (a writer under its beacon or a pass under the maintenance lock).
+    One writer per state. Expects ``spark``, ``target_dir``,
+    ``pk_cols``, ``lsn_col`` and ``n_partitions`` on self."""
+
+    @staticmethod
+    def committed_partitions(state_dir: str) -> int | None:
+        """The partition count of the latest committed version, or None
+        when ``state_dir`` holds no committed partitioned state."""
+        snap = read_manifest(state_dir)
+        return None if snap is None else int(snap["n_partitions"])
+
+    def _snapshot(self) -> dict | None:
+        """The latest version, guarded: another partition count fails
+        fast (routing would put one key in two partitions), and so does
+        a directory with no ``_log/`` holding loose parquet or
+        ``part_*`` directories, rather than reading as empty."""
+        snap = read_manifest(self.target_dir)
+        if snap is None:
+            if not os.path.isdir(os.path.join(self.target_dir, LOG_DIR)):
+                self._refuse_foreign_state()
+            return None
+        if snap["n_partitions"] != self.n_partitions:
+            raise ValueError(
+                f"partitioned state at {self.target_dir} was written with "
+                f"n_partitions={snap['n_partitions']}; this sink uses "
+                f"{self.n_partitions} — reopening with a different "
+                "partition count would mis-assign keys"
+            )
+        return snap
+
+    def _refuse_foreign_state(self) -> None:
+        try:
+            names = os.listdir(self.target_dir)
+        except (FileNotFoundError, NotADirectoryError):
+            return
+        root = self.target_dir
+        if any(
+            (n.endswith(".parquet") or n == "_SUCCESS")
+            and os.path.isfile(os.path.join(root, n))
+            for n in names
+        ):
+            raise ValueError(
+                f"state dir {root} holds a NON-partitioned table (loose "
+                "parquet files at the root); refusing to silently ignore "
+                "it — use the non-partitioned sink, or rebuild the state"
+            )
+        if any(n.startswith("part_") for n in names):
+            raise ValueError(
+                f"state dir {root} holds part_* directories but no "
+                f"{LOG_DIR}/ manifest — written before the manifest format "
+                "or by something else, so its partition count and live "
+                "files are unknown; rebuild the state by re-ingesting it"
+            )
+
+    # -- the commit ----------------------------------------------------------
+
+    def _commit(
+        self,
+        snap: dict | None,
+        frame: DataFrame | None,
+        touched: list[int] | None,
+        batch_id: int | None = None,
+        n_partitions: int | None = None,
+    ) -> None:
+        """Commit one version over ``snap``. ``frame`` (with the ``__p``
+        column) holds the new rows of the ``touched`` partitions (None:
+        all, as in a rescale); a touched partition with no rows leaves
+        the manifest.
+
+        1. One ``partitionBy("__p")`` job writes ``__batchtmp_<token>``,
+           shuffled on ``__p`` first so each partition gets one file
+           (else every task fans out into every partition: 4x wall on a
+           100k-row batch over 32 partitions).
+        2. Each ``__p=N`` is renamed to a new generation directory.
+        3. Version v+1 is created put-if-absent (tmp file, ``os.link``):
+           the commit point; a second commit of v+1 fails.
+        4. Then generations and batch temps it does not name, and all
+           but the two newest log entries, are deleted.
+
+        A crash before step 3 leaves unnamed debris, one after it a
+        committed batch; either way the re-driven batch converges."""
+        version = 0 if snap is None else snap["version"] + 1
+        parts = {} if snap is None or touched is None else {
+            p: g for p, g in snap["parts"].items() if int(p) not in touched
         }
-        keep = (
-            routed.filter(F.col("__p").isin(hit) & ~F.col("__dead"))
-            .drop("__dead")
-        )
-        self._swap_parts(keep, sorted(hit))
-        # a partition purged to empty leaves no __p=<p> dir in the batch
-        # tmp, so _swap_parts keeps the OLD dir for it — remove those
-        # explicitly (the whole partition was tombstones past horizon)
-        for p in emptied:
-            pdir = self._part_dir(p)
-            if os.path.isdir(pdir):
-                shutil.rmtree(pdir, ignore_errors=True)
-        return {"purged": purged, "partitions_rewritten": len(hit)}
-
-    def rescale(self, n_new: int) -> None:
-        """Re-hash the state into ``n_new`` partitions (grow a layout
-        that was sized for yesterday's corpus, or shrink an oversized
-        one). The partition count is baked into every routing hash, so
-        this is necessarily an O(state) rewrite — ONE shuffle-and-write
-        job into a fresh directory, then an atomic two-rename swing, the
-        maintenance-op analog of re-clustering a Delta/Iceberg table.
-        Run it on a quiesced state (no concurrent batches), like any
-        re-partitioning DDL.
-
-        Crash-safe: the new layout is fully built (marker included)
-        under ``<target>.__rescale_new_*`` before the old dir moves to
-        ``<target>.__rescale_old_*``; a crash between the renames is
-        recovered on the next open by :meth:`_recover_rescale` (the
-        presence of a completed new dir decides which way). The sink's
-        own ``n_partitions`` is updated, so subsequent batches route
-        with the new count."""
-        import json
-
-        from sqlserver_pg_cdc_spark.streaming.lock import maintenance_lock
-
-        if n_new < 1:
-            raise ValueError("n_new must be >= 1")
-        with maintenance_lock(self.target_dir, "rescale"):
-            self._rescale_locked(n_new)
-
-    def _rescale_locked(self, n_new: int) -> None:
-        import json
-
-        self._recover_rescale()
-        self._check_layout()
-        st = self.read_target()
+        schema = None if snap is None else snap["schema"]
+        n = n_partitions or self.n_partitions
         token = uuid.uuid4().hex[:8]
-        new_dir = f"{self.target_dir}.__rescale_new_{token}"
-        marker_meta = {"n_partitions": n_new}
-        old_marker = os.path.join(self.target_dir, self._LAYOUT_FILE)
-        if os.path.exists(old_marker):
-            with open(old_marker) as f:
-                prev_meta = json.load(f)
-            for k in ("schema", "schema_version", "schema_sha256"):
-                if k in prev_meta:
-                    marker_meta[k] = prev_meta[k]
-        os.makedirs(new_dir, exist_ok=True)
-        if st is not None:
-            routed = st.withColumn(
-                "__p",
-                F.pmod(
-                    F.xxhash64(*[F.col(c) for c in self.pk_cols]),
-                    F.lit(n_new),
-                ).cast("int"),
-            )
-            tmp = os.path.join(new_dir, "__hive")
+        log = os.path.join(self.target_dir, LOG_DIR)
+        os.makedirs(log, exist_ok=True)
+        if frame is not None:
+            tmp = os.path.join(self.target_dir, f"__batchtmp_{token}")
             (
-                routed.repartition(n_new, "__p")
+                frame.repartition(n if touched is None else len(touched), "__p")
                 .write.mode("overwrite")
                 .partitionBy("__p")
                 .parquet(tmp)
             )
-            for d in os.listdir(tmp):
+            schema = _union_schema(schema, frame.drop("__p").schema)
+            for d in sorted(os.listdir(tmp)):
                 if d.startswith("__p="):
-                    p = int(d.split("=", 1)[1])
-                    os.rename(
-                        os.path.join(tmp, d),
-                        os.path.join(new_dir, f"part_{p:05d}"),
-                    )
-            shutil.rmtree(tmp, ignore_errors=True)
-        # params/aux markers (LSH params, IVF baselines, centroid
-        # parquet DIRECTORIES like DiversitySampleSink's __centroids or
-        # the ann CLI's __centroids.parquet, ...) ride along: they
-        # describe the state's content, not its layout. Dropping an aux
-        # DIRECTORY here strands the params json that references it, so
-        # the next batch crashes resolving a nonexistent path (round-11
-        # ADVICE). The maintenance lock does NOT ride — it belongs to
-        # THIS pass (legacy in-dir name excluded for pre-round-11
-        # states); neither do layout internals (__hive, __rescale_*) nor
-        # a legacy in-dir __writers beacon dir (transient, owned by the
-        # batches that created it).
-        from sqlserver_pg_cdc_spark.streaming.lock import (
-            _BEACON_DIR,
-            LOCK_FILE,
-        )
-
-        if os.path.isdir(self.target_dir):
-            for name in os.listdir(self.target_dir):
-                srcf = os.path.join(self.target_dir, name)
-                if (
-                    not name.startswith("__")
-                    or name in (self._LAYOUT_FILE, LOCK_FILE, _BEACON_DIR)
-                    or name.startswith("__rescale_")
-                    or name == "__hive"
-                ):
-                    continue
-                if os.path.isfile(srcf):
-                    shutil.copy2(srcf, os.path.join(new_dir, name))
-                elif os.path.isdir(srcf):
-                    shutil.copytree(srcf, os.path.join(new_dir, name))
-        with open(os.path.join(new_dir, self._LAYOUT_FILE), "w") as f:
-            json.dump(marker_meta, f)
-        # completion sentinel: _recover_rescale only adopts a new dir
-        # that finished building
-        open(os.path.join(new_dir, "__rescale_complete"), "w").close()
-        old_dir = f"{self.target_dir}.__rescale_old_{token}"
-        if os.path.isdir(self.target_dir):
-            os.rename(self.target_dir, old_dir)
-        os.rename(new_dir, self.target_dir)
-        os.remove(os.path.join(self.target_dir, "__rescale_complete"))
-        shutil.rmtree(old_dir, ignore_errors=True)
-        self.n_partitions = n_new
-
-    def _recover_rescale(self) -> None:
-        """Heal a crash mid-:meth:`rescale`. Cases, by on-disk evidence:
-        target exists -> any leftover __rescale_* siblings are stale
-        (crash after the final rename or before the first): remove
-        incomplete news, remove olds only when the target is live.
-        Target MISSING -> a completed new dir is adopted; else the old
-        dir is restored.
-
-        A target that exists but is a HUSK — no layout marker and no
-        partitions, e.g. recreated by a stray ``os.makedirs`` between
-        the swap's two renames (the round-10 ADVICE scenario; markers
-        are sibling files since, but pre-fix debris may persist) — is
-        NOT live: when a completed new dir exists the husk is removed
-        and the new layout adopted. A completed new dir is never
-        deleted unless the target carries its own layout marker."""
-        import glob as _glob
-
-        news = sorted(_glob.glob(f"{self.target_dir}.__rescale_new_*"))
-        olds = sorted(_glob.glob(f"{self.target_dir}.__rescale_old_*"))
-        if not news and not olds:
-            return
-        if (
-            os.path.isdir(self.target_dir)
-            and not self._target_is_live()
-            and (
-                olds
-                or any(
-                    os.path.exists(os.path.join(d, "__rescale_complete"))
-                    for d in news
-                )
-            )
-        ):
-            # husk: clear it so the missing-target logic below adopts
-            # the completed new layout (or restores the old one)
-            shutil.rmtree(self.target_dir, ignore_errors=True)
-        if not os.path.isdir(self.target_dir):
-            done = [
-                d
-                for d in news
-                if os.path.exists(os.path.join(d, "__rescale_complete"))
-            ]
-            if done:
-                os.rename(done[-1], self.target_dir)
-                os.remove(
-                    os.path.join(self.target_dir, "__rescale_complete")
-                )
-                news.remove(done[-1])
-            elif olds:
-                os.rename(olds[-1], self.target_dir)
-                olds.remove(olds[-1])
-        if os.path.isdir(self.target_dir):
-            live = self._target_is_live()
-            for d in news + olds:
-                if not live and os.path.exists(
-                    os.path.join(d, "__rescale_complete")
-                ):
-                    # never delete a completed layout while the target
-                    # cannot prove it IS the state (round-10 ADVICE:
-                    # this was the total-loss path)
-                    continue
-                shutil.rmtree(d, ignore_errors=True)
-
-    def _target_is_live(self) -> bool:
-        """A target dir counts as the real state only if it carries its
-        layout marker or at least one partition dir — a bare directory
-        (husk) proves nothing."""
-        if os.path.exists(os.path.join(self.target_dir, self._LAYOUT_FILE)):
-            return True
+                    gen = f"part_{int(d[4:]):05d}.v{version}-{token}"
+                    os.rename(os.path.join(tmp, d), os.path.join(self.target_dir, gen))
+                    parts[d[4:]] = gen
+        bids = [b for b in (batch_id, snap and snap["batch_id"]) if b is not None]
+        body = {
+            "version": version,
+            "n_partitions": n,
+            "schema": schema,
+            "parts": parts,
+            "batch_id": max(bids) if bids else None,
+        }
+        body["sha256"] = _manifest_sha(body)
+        final = os.path.join(log, f"{version:020d}.json")
+        with open(f"{final}.tmp_{token}", "w") as f:
+            json.dump(body, f)
         try:
-            return any(
-                n.startswith("part_")
-                for n in os.listdir(self.target_dir)
+            os.link(f"{final}.tmp_{token}", final)
+        except FileExistsError:
+            raise RuntimeError(
+                f"version {version} of {self.target_dir} was committed by "
+                "another writer meanwhile (one writer per state); re-drive "
+                "the batch"
+            ) from None
+        finally:
+            os.remove(f"{final}.tmp_{token}")
+        self.n_partitions = n
+        self._gc(body)
+
+    def _gc(self, body: dict) -> None:
+        """Step 4 of :meth:`_commit`. Two log entries stay, so a reader
+        that listed the log just before this commit still finds its
+        version (one that misses it re-lists)."""
+        live = set(body["parts"].values())
+        for n in os.listdir(self.target_dir):
+            if n.startswith("__batchtmp_") or (n.startswith("part_") and n not in live):
+                shutil.rmtree(os.path.join(self.target_dir, n), ignore_errors=True)
+        log = os.path.join(self.target_dir, LOG_DIR)
+        names = os.listdir(log)
+        keep = sorted(n for n in names if _VERSION_RE.fullmatch(n))[-2:]
+        for n in set(names) - set(keep):
+            try:
+                os.remove(os.path.join(log, n))
+            except FileNotFoundError:
+                pass
+
+    def _merge_batch(
+        self,
+        batch: DataFrame,
+        batch_id: int | None,
+        merge: Callable[[DataFrame | None, DataFrame], DataFrame],
+        what: str,
+        skip_replay: bool = False,
+    ) -> None:
+        """The one batch path of the partitioned sinks: route ``batch``
+        by key hash (keys cast to the stored types), read only the
+        touched partitions and commit ``merge(prev_slice, batch)`` as
+        their content. With ``skip_replay`` a batch whose id is at or
+        below the committed ``batch_id`` is skipped whole. The writer
+        beacon excludes maintenance passes for the whole batch. The
+        LAZY ``localCheckpoint`` materializes in the touched-partition
+        collect, so the merge and write plan over a LogicalRDD."""
+        from sqlserver_pg_cdc_spark.streaming.lock import writer_beacon
+
+        with writer_beacon(self.target_dir, what):
+            snap = self._snapshot()
+            done = None if snap is None else snap["batch_id"]
+            if skip_replay and None not in (batch_id, done) and batch_id <= done:
+                self._gc(snap)  # merged already; collect its debris
+                return
+            routed = (
+                self._cast_keys_to_stored(batch, snap=snap)
+                .withColumn("__p", self._part_expr())
+                .localCheckpoint(eager=False)
             )
-        except (FileNotFoundError, NotADirectoryError):
-            return False
-
-    @staticmethod
-    def _schema_sha(ddl: dict, version: int) -> str:
-        import hashlib
-        import json
-
-        blob = json.dumps(
-            {"schema": ddl, "schema_version": int(version)}, sort_keys=True
-        ).encode()
-        return hashlib.sha256(blob).hexdigest()
-
-    @staticmethod
-    def _schema_union_sha(ddl: dict, version: int) -> str:
-        """Rollback-proof twin of ``_schema_sha`` for union-maintained
-        stamps: the blob shape includes the union flag, so only a
-        union-aware writer can produce it. A pre-union binary writing
-        to this state rewrites ``schema``/``schema_version``/
-        ``schema_sha256`` under its overwrite rule (possibly NARROWING
-        the stamp below a footer) while preserving the unknown
-        ``schema_union*`` keys — the version bump then invalidates this
-        hash, ``_stamped_schema`` rejects the stamp, and reads fall
-        back to the footer-merge path instead of silently dropping the
-        evolved columns (round-12 ADVICE)."""
-        import hashlib
-        import json
-
-        blob = json.dumps(
-            {
-                "schema": ddl,
-                "schema_union": True,
-                "schema_version": int(version),
-            },
-            sort_keys=True,
-        ).encode()
-        return hashlib.sha256(blob).hexdigest()
-
-    def _stamp_schema(self, df: DataFrame) -> None:
-        """Record the ACTIVE (post-evolution) schema in __layout.json —
-        stamped on create and UNIONED on every write, with a version
-        counter and a sha256 over (schema, version).
-
-        The stamp is additive: a batch whose merge touched only
-        partitions that predate an evolution carries the NARROW schema,
-        but partitions written during the evolution still hold the wide
-        one — overwriting the stamp with the narrow ddl would shrink it
-        below what is on disk. Unioning keeps the invariant *stamp ⊇
-        every part footer* (every footer was written by a merge whose
-        schema was unioned in just before the swap; evolution is
-        additive-only — a type change DLQs in ``align_evolved_sides``,
-        so a name can never carry two types). ``schema_union: true``
-        marks stamps maintained under this invariant; ``_read_parts``
-        trusts only those for footer-free reads — a legacy stamp
-        (written by the old overwrite rule) keeps the mergeSchema read.
-        ``_check_layout`` still refuses a marker whose hash does not
-        match its recorded schema (a tampered or hand-edited stamp
-        fails fast instead of misleading whoever trusts it)."""
-        import json
-
-        marker = os.path.join(self.target_dir, self._LAYOUT_FILE)
-        if not os.path.exists(marker):
-            return
-        ddl = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        with open(marker) as f:
-            meta = json.load(f)
-        prev = meta.get("schema") or {}
-        if meta.get("schema_union"):
-            merged = dict(prev)
-            merged.update(ddl)
-        else:
-            # first write under the union rule: a legacy stamp (old
-            # overwrite semantics) may already be narrower than some
-            # footer, so it must not seed the union — start it from
-            # THIS batch's post-merge schema and leave schema_union
-            # unset; reads keep mergeSchema until a fresh state earns
-            # the flag from its very first write
-            merged = ddl
-        first_stamp = "schema" not in meta
-        if (
-            merged == prev
-            and "schema_sha256" in meta
-            and not first_stamp
-            and (
-                not meta.get("schema_union")
-                or "schema_union_sha256" in meta
-            )  # upgrade a pre-rollback-guard union stamp in place
-        ):
-            return
-        meta["schema"] = merged
-        if first_stamp:
-            # a brand-new state's first stamp covers every byte ever
-            # written to it, so the union invariant holds from here on
-            meta["schema_union"] = True
-        meta["schema_version"] = int(meta.get("schema_version", 0)) + 1
-        meta["schema_sha256"] = self._schema_sha(
-            merged, meta["schema_version"]
-        )
-        if meta.get("schema_union"):
-            meta["schema_union_sha256"] = self._schema_union_sha(
-                merged, meta["schema_version"]
+            touched = sorted(
+                r["__p"] for r in routed.select("__p").distinct().collect()
             )
-        tmp = f"{marker}.tmp_{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, marker)
+            if touched:
+                new = merge(self._read_parts(snap, touched), routed.drop("__p"))
+                self._commit(
+                    snap, new.withColumn("__p", self._part_expr()), touched, batch_id
+                )
 
-    def _stamped_schema(self) -> dict | None:
-        """The sha-verified union schema from __layout.json, or None
-        when the stamp is absent, legacy (no union flag), fails its
-        hash check, or lacks a matching union-aware hash (a pre-union
-        binary rewrote it since — rollback guard, see
-        ``_schema_union_sha``) — callers fall back to footer reads."""
-        import json
+    # -- reads ---------------------------------------------------------------
 
-        marker = os.path.join(self.target_dir, self._LAYOUT_FILE)
-        try:
-            with open(marker) as f:
-                meta = json.load(f)
-        except (FileNotFoundError, NotADirectoryError, ValueError):
-            return None
-        ddl = meta.get("schema")
-        if not ddl or not meta.get("schema_union"):
-            return None
-        if meta.get("schema_sha256") != self._schema_sha(
-            ddl, meta.get("schema_version", 0)
-        ):
-            return None
-        if meta.get("schema_union_sha256") != self._schema_union_sha(
-            ddl, meta.get("schema_version", 0)
-        ):
-            return None
-        return ddl
-
-    def _sweep_batchtmps(self) -> None:
-        """A crash between the partitionBy write and its finally block
-        strands a __batchtmp_* dir at the state-dir root; the
-        per-partition __old/__tmp recovery never touches those, so sweep
-        them here (every batchtmp present at batch START is from a
-        crashed attempt — live ones exist only inside _apply)."""
-        import glob as _glob
-
-        for d in _glob.glob(os.path.join(self.target_dir, "__batchtmp_*")):
-            shutil.rmtree(d, ignore_errors=True)
-
-    def _part_expr(self):
+    def _part_expr(self, n: int | None = None):
         return F.pmod(
             F.xxhash64(*[F.col(c) for c in self.pk_cols]),
-            F.lit(self.n_partitions),
+            F.lit(n or self.n_partitions),
         ).cast("int")
 
-    def _part_dir(self, p: int) -> str:
-        return os.path.join(self.target_dir, f"part_{p:05d}")
+    def _existing_parts(self, snap: dict | None = None) -> list[int]:
+        snap = snap or self._snapshot()
+        return [] if snap is None else sorted(int(p) for p in snap["parts"])
 
-    def _recover_part(self, pdir: str) -> None:
-        """Per-partition crash recovery: a crash between the two swap
-        renames leaves the newest __old_* generation as the pre-batch
-        partition — restore it."""
-        if os.path.exists(pdir):
-            return
-        olds = self._generations("old", pdir)
-        if olds:
-            os.rename(olds[-1], pdir)
-
-    def _existing_parts(self) -> list[int]:
-        import glob as _glob
-
-        out = []
-        for d in _glob.glob(os.path.join(self.target_dir, "part_[0-9]*")):
-            base = os.path.basename(d)
-            if "__" in base:  # tmp/old generation, not a live partition
-                continue
-            out.append(int(base.split("_", 1)[1]))
-        return sorted(out)
-
-    def _swap_parts(self, merged: DataFrame, parts: list[int]) -> None:
-        """ONE job writes every touched partition hive-style into a
-        batch temp; then one pure-rename generation swap per touched
-        partition. ``merged`` must carry the ``__p`` routing column.
-
-        The shuffle on ``__p`` before the write is deliberate: without
-        it every upstream task fans out across ALL touched partition
-        directories (tasks x partitions small files — measured 4x wall
-        on a 100k-row batch touching 32 partitions), while with it each
-        partition directory gets ~one well-sized file — also exactly the
-        file layout the partition-pruned reads want."""
-        tmp = os.path.join(self.target_dir, f"__batchtmp_{uuid.uuid4().hex[:8]}")
-        (
-            merged.repartition(max(1, len(parts)), "__p")
-            .write.mode("overwrite")
-            .partitionBy("__p")
-            .parquet(tmp)
-        )
-        try:
-            for p in parts:
-                src = os.path.join(tmp, f"__p={p}")
-                if not os.path.isdir(src):
-                    continue  # merged to nothing for this partition
-                pdir = self._part_dir(p)
-                if os.path.exists(pdir):
-                    os.rename(pdir, f"{pdir}__old_{uuid.uuid4().hex[:8]}")
-                os.rename(src, pdir)
-                for stale in self._generations("old", pdir) + self._generations(
-                    "tmp", pdir
-                ):
-                    shutil.rmtree(stale, ignore_errors=True)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+    def _read_parts(
+        self, snap: dict | None, parts: list[int] | None = None
+    ) -> DataFrame | None:
+        """Partitions ``parts`` (all when None) of ``snap``, or None.
+        One directory per partition keeps Spark's listing serial (over
+        32 file paths start a listing job); the exact manifest schema
+        reads NULL for columns an older partition lacks, no footer merge."""
+        if snap is None:
+            return None
+        named = snap["parts"]
+        keys = sorted(named, key=int) if parts is None else map(str, parts)
+        dirs = [os.path.join(self.target_dir, named[k]) for k in keys if k in named]
+        if not dirs:
+            return None
+        schema = T.StructType.fromJson(snap["schema"])
+        return self.spark.read.schema(schema).parquet(*dirs)
 
     def read_target(self) -> DataFrame | None:
-        self._recover_rescale()
-        if not os.path.isdir(self.target_dir):
+        return self._read_parts(self._snapshot())
+
+    def _stored_pk_types(self, snap: dict | None = None) -> dict[str, str] | None:
+        """simpleString type of each pk column as committed (None before
+        the first commit). Pk types never change: writes that would
+        widen them raise in :meth:`_cast_keys_to_stored`."""
+        snap = snap or self._snapshot()
+        if snap is None or snap["schema"] is None:
             return None
-        self._check_layout()
-        self._sweep_batchtmps()
-        for p in range(self.n_partitions):
-            self._recover_part(self._part_dir(p))
-        parts = self._existing_parts()
-        if not parts:
-            return None
-        return self._read_parts(parts)
-
-    def _read_parts(self, parts: list[int]) -> DataFrame:
-        """Read a set of partition dirs under the state's UNION schema:
-        after an additive evolution, touched partitions carry the
-        widened schema while untouched ones keep the old — a plain read
-        would pick one footer's schema and silently drop (or never
-        surface) the new column for half the state.
-
-        When the layout marker carries a sha-verified union stamp
-        (``_stamp_schema``: stamp ⊇ every footer by construction), the
-        read passes it explicitly — the parquet reader maps columns by
-        name and NULL-fills fields a footer lacks, the exact mergeSchema
-        semantics WITHOUT the footer-merging job Spark otherwise runs
-        per read (one scheduler round trip per state open, at any
-        scale). Legacy stamps (or a DDL the reader rejects) fall back to
-        mergeSchema."""
-        dirs = [self._part_dir(p) for p in parts]
-        ddl = self._stamped_schema()
-        if ddl:
-            try:
-                return self.spark.read.schema(
-                    ", ".join(f"`{n}` {t}" for n, t in ddl.items())
-                ).parquet(*dirs)
-            except Exception:
-                pass  # unparseable stamp: footers stay authoritative
-        return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
-
-    def _stored_pk_types(self) -> dict[str, str] | None:
-        """simpleString type of each pk column AS STORED. None when no
-        partitions exist yet.
-
-        Source of truth order: the layout marker's sha-VERIFIED schema
-        stamp when it covers every pk column (pk types are immutable —
-        ``_cast_keys_to_stored`` raises on widening writes — so any
-        stamp epoch has the correct types; no footer open, no Spark
-        planning per probe), else one partition's parquet footer. The
-        sha check matters (round-12 ADVICE): probe/read paths
-        (``read_keys``, ``_cast_keys_to_stored``) never pass through
-        ``_check_layout``, so a tampered or hand-edited marker would
-        otherwise feed wrong cast types into the xxhash64 partition
-        routing — silent lookup misses instead of the fail-fast every
-        other stamp consumer gets. The union flag is deliberately NOT
-        required here (unlike ``_stamped_schema``): pk types are
-        immutable, so even a legacy overwrite-era stamp carries the
-        correct pk types as long as its hash proves no one edited it.
-        Every batch probes/casts through this 2-3 times, so the footer
-        read was a per-batch fixed cost at any data scale."""
-        parts = self._existing_parts()
-        if not parts:
-            return None
-        import json
-
-        marker = os.path.join(self.target_dir, self._LAYOUT_FILE)
-        stamped: dict = {}
-        try:
-            with open(marker) as f:
-                meta = json.load(f)
-        except (FileNotFoundError, NotADirectoryError, ValueError):
-            meta = {}
-        ddl = meta.get("schema")
-        if ddl and meta.get("schema_sha256") == self._schema_sha(
-            ddl, meta.get("schema_version", 0)
-        ):
-            stamped = ddl
-        if all(c in stamped for c in self.pk_cols):
-            return {c: stamped[c] for c in self.pk_cols}
-        schema = self.spark.read.parquet(self._part_dir(parts[0])).schema
-        by_name = {f.name: f.dataType.simpleString() for f in schema.fields}
-        return {c: by_name[c] for c in self.pk_cols if c in by_name}
+        schema = T.StructType.fromJson(snap["schema"])
+        types = {f.name: f.dataType.simpleString() for f in schema.fields}
+        return {c: types[c] for c in self.pk_cols if c in types}
 
     def _cast_keys_to_stored(
-        self, df: DataFrame, probe: bool = False
+        self, df: DataFrame, probe: bool = False, snap: dict | None = None
     ) -> DataFrame:
-        """Cast pk columns to the STORED key types before hashing.
-
-        ``xxhash64`` is type-sensitive: hash(1 AS INT) != hash(1 AS
-        BIGINT). ``createDataFrame`` infers LongType/DoubleType from
-        Python ints/floats, so probing an IntegerType-keyed state with
-        uncast keys computes the WRONG partition id and the lookup
-        silently returns nothing — every probe (and the write path, when
-        a batch's key dtype drifts from the stored one) must hash the
-        stored dtype.
-
-        Down-cast GUARD (r8 ADVICE): when the batch key type is strictly
-        WIDER than the stored type, a non-ANSI down-cast of an
-        out-of-range value (e.g. a bigint id > 2^31 against an
-        int-keyed state) silently wraps, hashing onto — and merging
-        with — an UNRELATED key. The hazard is per-VALUE, not per-type
-        (Python ints always arrive as bigint), so the guard is
-        value-level: a roundtrip-through-the-stored-type comparison.
-        Probes (``probe=True``) FILTER out-of-range keys — a key that
-        cannot be represented in the stored type provably isn't in the
-        state, so no-match is the correct answer. Writes RAISE: an
-        out-of-range key in a change batch means the source re-keyed
-        wider than this state's layout — rebuild deliberately."""
-        types = self._stored_pk_types()
+        """Cast pk columns to the STORED key types before hashing:
+        ``xxhash64`` is type-sensitive, so an uncast probe (Python ints
+        arrive as bigint) or a dtype-drifted batch would route wrong.
+        Down-cast guard: a WIDER batch key's out-of-range value would
+        wrap onto an unrelated key, so a value-level roundtrip through
+        the stored type FILTERS such probe keys (provably absent) and
+        makes writes RAISE (rebuild the state deliberately)."""
+        types = self._stored_pk_types(snap)
         if not types:
             return df
         out = df
@@ -1170,12 +765,9 @@ class HashPartitionedStateMixin:
             )
             if wider:
                 # try_cast: NULL on overflow under ANSI and non-ANSI
-                # alike, so the roundtrip comparison detects the
-                # out-of-range value instead of wrapping (non-ANSI) or
-                # crashing the whole probe job (ANSI CAST_OVERFLOW)
-                safe = (
-                    F.col(c).try_cast(t).cast(b).eqNullSafe(F.col(c))
-                )
+                # alike, so the roundtrip detects the value instead of
+                # wrapping it or failing the job with CAST_OVERFLOW
+                safe = F.col(c).try_cast(t).cast(b).eqNullSafe(F.col(c))
                 if probe:
                     out = out.filter(safe)
                 elif out.filter(~safe).limit(1).count() > 0:
@@ -1186,25 +778,21 @@ class HashPartitionedStateMixin:
                         "onto unrelated keys; rebuild the state with the "
                         "wider key type"
                     )
-                # remaining values are verified in-range: try_cast here
-                # only because ANSI evaluates casts before the filter is
-                # guaranteed to have pruned (expression reordering)
+                # in range now; try_cast because ANSI may evaluate the
+                # cast before the filter has pruned
                 out = out.withColumn(c, F.col(c).try_cast(t))
             else:
                 out = out.withColumn(c, F.col(c).cast(t))
         return out
 
-    def _parts_for_keys(self, key_rows: list) -> list[int]:
-        """Partition ids a set of key tuples hashes to — the same
-        ``pmod(xxhash64(*pk), n)`` the write path routes with, computed
-        through Spark so the hash semantics are identical by
-        construction (probe keys cast to the stored key dtypes first —
-        xxhash64 is type-sensitive). Bounded by the lookup set, never by
-        state."""
+    def _parts_for_keys(self, key_rows: list, snap: dict | None = None) -> list[int]:
+        """Partition ids a set of key tuples hashes to, computed through
+        Spark with the write path's own expression (keys cast to the
+        stored dtypes first). Bounded by the lookup set, never state."""
         if not key_rows:
             return []
         df = self._cast_keys_to_stored(
-            self.spark.createDataFrame(key_rows, self.pk_cols), probe=True
+            self.spark.createDataFrame(key_rows, self.pk_cols), True, snap
         )
         return sorted(
             r["__p"]
@@ -1212,28 +800,19 @@ class HashPartitionedStateMixin:
         )
 
     def read_keys(self, key_rows: list) -> DataFrame | None:
-        """Point-lookup path: read ONLY the partitions holding the given
-        keys (list of tuples, or scalars for a single-column PK), then
-        filter to exactly those keys. This is the partitioned layout's
-        read payoff — a k-key lookup opens at most k partition
-        directories of the whole state. NULL-safe key match."""
-        # heal a crash between rescale's two renames BEFORE probing:
-        # without this, a point lookup during the momentarily-absent
-        # target dir silently reads as empty state (r8 ADVICE)
-        self._recover_rescale()
+        """Point lookup: read ONLY the partitions holding the given keys
+        (tuples, or scalars for a single-column PK) and filter to
+        exactly those keys, NULL-safe — a k-key lookup opens at most k
+        partition directories."""
         if key_rows and not isinstance(key_rows[0], (tuple, list)):
             key_rows = [(k,) for k in key_rows]
         key_rows = [tuple(k) for k in key_rows]
-        if not os.path.isdir(self.target_dir) or not key_rows:
+        snap = self._snapshot()
+        if snap is None or not key_rows:
             return None
-        self._check_layout()
-        hit = self._parts_for_keys(key_rows)
-        for p in hit:
-            self._recover_part(self._part_dir(p))
-        parts = [p for p in hit if os.path.isdir(self._part_dir(p))]
-        if not parts:
+        df = self._read_parts(snap, self._parts_for_keys(key_rows, snap))
+        if df is None:
             return None
-        df = self._read_parts(parts)
         keys = self.spark.createDataFrame(key_rows, self.pk_cols).alias("__k")
         d = df.alias("__d")
         cond = None
@@ -1241,6 +820,82 @@ class HashPartitionedStateMixin:
             term = d[c].eqNullSafe(keys[c])
             cond = term if cond is None else (cond & term)
         return d.join(keys, cond, "left_semi")
+
+    # -- day-2 maintenance ---------------------------------------------------
+
+    def _tombstone_flag(self, df: DataFrame, deleted_col: str | None):
+        """NULL-safe boolean tombstone predicate over stored state: the
+        index sinks store a boolean ``__del``, the CDC pipeline
+        Debezium's string ``__deleted``; with ``deleted_col`` None,
+        whichever of the two the state carries is used."""
+        col = deleted_col or next(
+            (c for c in ("__del", "__deleted") if c in df.columns), None
+        )
+        if col is None:
+            return None
+        c = F.col(col)
+        if dict(df.dtypes).get(col) != "boolean":
+            c = F.lower(c.cast("string")) == F.lit("true")
+        return F.coalesce(c, F.lit(False))
+
+    def _drop_rows(self, dead: Callable[[DataFrame], object]) -> tuple[int, int]:
+        """One maintenance commit: rewrite the partitions holding rows
+        where ``dead(state)`` (a NULL-safe Column; None drops nothing)
+        holds, without them. Returns (rows dropped, partitions
+        rewritten). Not cached: the frame is state-sized and its plan a
+        plain scan, so the stats pass and the rewrite re-read the same
+        snapshot's files."""
+        snap = self._snapshot()
+        st = self._read_parts(snap)
+        pred = None if st is None else dead(st)
+        if pred is None:
+            return 0, 0
+        routed = st.withColumn("__p", self._part_expr()).withColumn("__dead", pred)
+        stats = routed.filter(F.col("__dead")).groupBy("__p").count().collect()
+        hit = sorted(r["__p"] for r in stats)
+        if hit:
+            keep = routed.filter(F.col("__p").isin(hit) & ~F.col("__dead"))
+            self._commit(snap, keep.drop("__dead"), hit)
+        return sum(r["count"] for r in stats), len(hit)
+
+    def purge_tombstones(self, watermark_lsn, deleted_col: str | None = None) -> dict:
+        """Drop soft-deleted rows whose LSN is at or below
+        ``watermark_lsn``, which the CALLER guarantees the source can no
+        longer replay (below it the LSN guard no longer needs them; the
+        reference's retention twin: docs/development-architecture.md:226).
+        One commit rewriting only partitions that held such rows; one
+        purged to empty leaves the manifest, and an all-tombstone state
+        reads as None. Returns ``{"purged": n, "partitions_rewritten":
+        k}``. Holds the maintenance lock."""
+        from sqlserver_pg_cdc_spark.streaming.lock import maintenance_lock
+
+        def dead(st: DataFrame):
+            flag = self._tombstone_flag(st, deleted_col)
+            if flag is None:
+                return None
+            wm = F.lit(watermark_lsn).cast(dict(st.dtypes)[self.lsn_col])
+            # a NULL lsn is never purgeable
+            return F.coalesce(flag & (F.col(self.lsn_col) <= wm), F.lit(False))
+
+        with maintenance_lock(self.target_dir, "purge_tombstones"):
+            purged, k = self._drop_rows(dead)
+        return {"purged": purged, "partitions_rewritten": k}
+
+    def rescale(self, n_new: int) -> None:
+        """Re-hash the state into ``n_new`` partitions: one write job
+        and one commit naming new generations and the new count (a crash
+        before it keeps the old layout, after it the new; aux files stay
+        put). ``n_partitions`` follows. Holds the maintenance lock."""
+        from sqlserver_pg_cdc_spark.streaming.lock import maintenance_lock
+
+        if n_new < 1:
+            raise ValueError("n_new must be >= 1")
+        with maintenance_lock(self.target_dir, "rescale"):
+            snap = self._snapshot()
+            st = self._read_parts(snap)
+            if st is not None:
+                st = st.withColumn("__p", self._part_expr(n_new))
+            self._commit(snap, st, None, n_partitions=n_new)
 
 
 class PartitionedParquetUpsertSink(HashPartitionedStateMixin, ParquetUpsertSink):
@@ -1250,25 +905,23 @@ class PartitionedParquetUpsertSink(HashPartitionedStateMixin, ParquetUpsertSink)
     ``ParquetUpsertSink`` reads, merges, and swaps the WHOLE table every
     micro-batch — O(table) per batch, the documented local stand-in for
     Delta/Iceberg MERGE. Here the table lives in ``n_partitions``
-    independent ``part_NNNNN/`` directories keyed by
-    ``pmod(xxhash64(*pk), n_partitions)``; a batch
+    hash partitions (``HashPartitionedStateMixin``); a batch
 
     1. dedupes to the latest LSN per key (batch-sized, once),
     2. collects the distinct partition ids it touches (bounded by
        ``n_partitions``, never by data),
-    3. reads ONLY the touched partitions of prior state,
+    3. reads ONLY the touched partitions of the committed snapshot,
     4. runs the same LSN-guarded ``merge_upsert`` against that slice and
-       rewrites ONLY those partitions (one hive-style ``partitionBy``
-       job + one rename-swap per touched partition).
+       commits the rewritten partitions as one new manifest version.
 
     Untouched partitions are never opened — per-batch work is O(batch +
     touched partitions), the partition-pruned discipline a clustered
     Delta MERGE gives (reference analog: JDBC sink upsert batches,
-    docker/configs/kafka-connect/postgresql-sink.json:23-34). Replay
-    needs no batch-id guard: the LSN guard makes re-driven batches
-    converge per partition, so a crash between two partition swaps
-    re-drives into both the committed and uncommitted partitions
-    harmlessly."""
+    docker/configs/kafka-connect/postgresql-sink.json:23-34). A reader
+    sees the whole batch or none of it. The manifest records the batch
+    id, but replay is not skipped on it: the LSN guard makes a
+    re-driven batch converge, whether its first attempt crashed before
+    the commit or after it."""
 
     def __init__(
         self,
@@ -1291,75 +944,21 @@ class PartitionedParquetUpsertSink(HashPartitionedStateMixin, ParquetUpsertSink)
     # so the merge result is unchanged.
     _batch_preduplicated: bool = False
 
-    def _apply(self, batch_df: DataFrame) -> None:
-        from sqlserver_pg_cdc_spark.streaming.lock import writer_beacon
-
-        # two-way single-writer enforcement: fail fast while a
-        # maintenance pass (purge/rescale/prune) holds the lock, AND
-        # hold a writer beacon for the batch's whole duration so a pass
-        # cannot START mid-batch either — a batch landing between a
-        # pass's stats and rewrite passes would be silently lost to the
-        # pass's stale snapshot. Structured Streaming replays the
-        # failed batch after the lock releases.
-        with writer_beacon(self.target_dir, "partitioned upsert batch"):
-            self._apply_guarded(batch_df)
-
-    def _apply_guarded(self, batch_df: DataFrame) -> None:
-        self._recover_rescale()
-        # localCheckpoint, not persist: the touched-partition collect,
-        # the merge, and the partitionBy write each re-plan everything
-        # above this point (for the index sinks that is a band/hash
-        # projection with thousands of literals — ~0.5 s of driver CPU
-        # per action at ANY data scale); truncating the lineage makes
-        # them plan over a LogicalRDD. Blocks are batch-sized, and a
-        # Structured Streaming replay re-drives the whole batch, so the
-        # non-replayable lineage changes nothing
-        # LAZY localCheckpoint: the very next statement is a FULL
-        # distinct().collect() over the frame (every partition computed
-        # — no limit/partial-job risk), so the checkpoint materializes
-        # inside that job instead of costing a separate eager pass —
-        # one batch materialization, not two, per upsert
+    def _apply(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         reduced = (
             batch_df
             if self._batch_preduplicated
             else latest_per_key(batch_df, self.pk_cols, self.lsn_col)
         )
-        deduped = (
-            self._cast_keys_to_stored(reduced)
-            .withColumn("__p", self._part_expr())
-            .localCheckpoint(eager=False)
+        self._merge_batch(
+            reduced,
+            batch_id,
+            lambda prev, changes: merge_upsert(
+                prev, changes, self.pk_cols, self.lsn_col, assume_deduped=True
+            ),
+            "partitioned upsert batch",
         )
-        try:
-            touched = sorted(
-                r["__p"] for r in deduped.select("__p").distinct().collect()
-            )
-            if not touched:
-                return
-            os.makedirs(self.target_dir, exist_ok=True)
-            self._check_layout(create=True)
-            self._sweep_batchtmps()
-            prev_parts: list[int] = []
-            for p in touched:
-                pdir = self._part_dir(p)
-                self._recover_part(pdir)
-                if os.path.exists(pdir):
-                    prev_parts.append(p)
-            prev = None
-            if prev_parts:
-                prev = self._read_parts(prev_parts)
-            merged = merge_upsert(
-                prev,
-                deduped.drop("__p"),
-                self.pk_cols,
-                self.lsn_col,
-                assume_deduped=True,
-            ).withColumn("__p", self._part_expr())
-            self._stamp_schema(merged.drop("__p"))
-            self._swap_parts(merged, touched)
-        finally:
-            # checkpoint blocks are freed by the ContextCleaner when the
-            # frame drops out of scope (unpersist() is a no-op on them)
-            del deduped
+
 
 class TransactionalParquetUpsertSink(ParquetUpsertSink):
     """St8 sink: ParquetUpsertSink plus source-transaction atomicity.

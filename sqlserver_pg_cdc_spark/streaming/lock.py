@@ -2,12 +2,12 @@
 
 Every day-2 maintenance op on streamed state (`purge_tombstones`,
 `rescale`, `prune_history`, `compact_batch_log`) documents "run
-quiesced — single writer only": the op re-reads partition files between
+quiesced — single writer only": the op works from one snapshot across
 its stats pass and its rewrite pass, so a concurrent ``foreachBatch``
-writer swapping a partition in that window would be silently
-overwritten with the op's stale snapshot (a lost update). Through
-round 9 that contract was documentation only; this module ENFORCES it
-in BOTH directions:
+writer committing in that window would race it for the next version
+(for the hash-partitioned state, whichever commits second fails; for a
+batch log, the pass could clobber the batch's generation). This module
+ENFORCES the contract in BOTH directions:
 
 * the maintenance op holds a create-exclusive marker
   (``__maintenance.lock``, O_CREAT|O_EXCL — atomic on every POSIX
@@ -42,19 +42,14 @@ Crash recovery, without TOCTOU races:
   fresh lock that replaced it in the meantime is never deleted.
 
 Breaking a stale lock is safe because every guarded op is individually
-crash-recoverable (`_recover_rescale`, per-partition generation swap,
+crash-recoverable (the partitioned state's manifest commit, the
 batch-log meta commit point): the lock exists to serialize LIVE
 writers, not to mark corruption.
 
 Both markers live at SIBLING paths of the state dir
 (``<state>.__maintenance.lock``, ``<state>.__writers/``), never inside
-it: `rescale` renames the state dir itself during its two-rename swap,
-and an in-dir lock would vanish from the target path mid-swap while a
-concurrent writer's ``os.makedirs(<state>/__writers)`` would recreate
-the target as a husk between the renames — failing the swap and
-tricking crash recovery into deleting the completed new layout
-(round-10 ADVICE). A sibling marker survives the swap untouched and
-marking it never materializes the state dir.
+it, so that marking a state never materializes its directory and the
+markers never mix with the state's own files.
 
 Long passes stay live via a HEARTBEAT: the holding process rewrites
 its marker's ``ts`` every ``stale_after_s / 8`` from a daemon thread,
@@ -98,10 +93,8 @@ class MaintenanceLockError(RuntimeError):
 
 def lock_path(state_dir: str) -> str:
     """The maintenance lock's SIBLING path for a state dir:
-    ``<state>.__maintenance.lock``. A sibling, not a member — the lock
-    must survive `rescale`'s rename of the state dir itself, and
-    creating it must never materialize the state dir (a husk target
-    recreated mid-swap breaks the swap's final rename)."""
+    ``<state>.__maintenance.lock``. A sibling, not a member: creating it
+    must never materialize the state dir."""
     return f"{os.path.normpath(state_dir)}.{LOCK_FILE}"
 
 
@@ -292,8 +285,8 @@ def assert_no_maintenance(
 
 def _beacon_dir(state_dir: str) -> str:
     """Writer beacons live at a SIBLING path (``<state>.__writers``)
-    for the same reason as the lock: marking in-flight writers must
-    neither materialize the state dir nor ride a `rescale` rename."""
+    for the same reason as the lock: marking in-flight writers must not
+    materialize the state dir."""
     return f"{os.path.normpath(state_dir)}.{_BEACON_DIR}"
 
 
@@ -377,8 +370,7 @@ def maintenance_lock(
     and raises — the pass must not start mid-batch.
 
     Deliberately does NOT create ``state_dir``: the lock is a sibling
-    file, and materializing the state dir here would recreate the husk
-    `rescale`'s swap must never find (see the module docstring)."""
+    file (see the module docstring)."""
     # mixed-version window (round-11 ADVICE): an OLD maintenance pass
     # marks INSIDE the state dir — refuse while its marker is live,
     # break it when stale. New code never writes this location. (The

@@ -8,19 +8,18 @@ rewrite here is STATE-sized (groups, not rows) — the correct
 incremental-view-maintenance shape at any scale: per batch, one delta
 aggregation over the batch + one merge shuffle over state-sized frames.
 
-Reuses the crash-recoverable generation-swap discipline of
-`ParquetUpsertSink` (write-to-tmp, two-rename swap, __old_* recovery),
-so a batch re-driven after a crash converges.  NOTE replayed batches
-are NOT idempotent for additive states (a re-merged batch double
+The flat sink reuses the crash-recoverable directory swap of
+`ParquetUpsertSink`; the partitioned sink commits through the
+hash-partitioned state's manifest (`streaming/apply.py`).  NOTE replayed
+batches are NOT idempotent for additive states (a re-merged batch double
 counts) — run under Spark checkpointing, which re-delivers each batch
-id at most once after the sink committed, or stamp batch ids into the
-state and skip already-merged ones (``idempotent=True`` does this with
-one extra max-batch-id column).
+id at most once after the sink committed, or skip already-merged batch
+ids with ``idempotent=True`` (the flat sink keeps one extra
+max-batch-id column, the partitioned sink reads the manifest's).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -217,27 +216,24 @@ class PartitionedContinuousAggSink(HashPartitionedStateMixin, ContinuousAggSink)
     every micro-batch — O(state) per batch, which with a
     high-cardinality group key (per-user rollups: 10^8 groups) turns a
     10-row batch into a full-table rewrite.  Here the state lives in
-    ``n_partitions`` independent subdirectories keyed by
-    ``pmod(xxhash64(*keys), n_partitions)``; a batch
+    ``n_partitions`` hash partitions (the ``HashPartitionedStateMixin``
+    store the upsert and SCD2 sinks share); a batch
 
     1. aggregates its delta (batch-sized),
     2. collects the distinct partition ids it touches (bounded by
        ``n_partitions``, never by data),
-    3. reads ONLY the touched partitions of prior state,
-    4. merges and rewrites ONLY those partitions (one job, hive-style
-       ``partitionBy`` write, then one rename-swap per touched
-       partition).
+    3. reads ONLY the touched partitions of the committed state,
+    4. merges them and commits the rewritten partitions as one new
+       manifest version.
 
     Untouched partition files are never opened, rewritten, or renamed —
     per-batch work is O(delta + touched state), the same
     partition-pruned discipline Delta/Iceberg MERGE gives on a
-    clustered table.  Each partition directory keeps the parent's
-    crash-recoverable generation-swap (write-tmp, rename old, rename
-    new, per-partition __old recovery), and with ``idempotent=True``
-    the replay guard is PER PARTITION (each partition's state carries
-    the last batch id merged into it), so a crash between two partition
-    swaps re-drives the batch without double counting the partitions
-    that already committed.
+    clustered table.  A batch lands whole or not at all, so with
+    ``idempotent=True`` the replay guard is the manifest's ``batch_id``:
+    a redelivered batch whose id is at or below it was merged already
+    and is skipped whole — on either side of a crash, nothing double
+    counts.
     """
 
     def __init__(
@@ -259,76 +255,14 @@ class PartitionedContinuousAggSink(HashPartitionedStateMixin, ContinuousAggSink)
             raise ValueError("n_partitions must be >= 1")
         self.n_partitions = n_partitions
 
-    # -- batch apply (partition plumbing: HashPartitionedStateMixin) --------
-
     def _apply(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         proj = self.project(batch_df) if self.project else batch_df
-        delta = (
-            # hash the STORED key dtypes — xxhash64 is type-sensitive,
-            # so a dtype-drifted batch must route like prior writes
-            self._cast_keys_to_stored(
-                build_state(proj, self.pk_cols, self.value_col)
-            )
-            .withColumn("__p", self._part_expr())
-            .persist()
+        self._merge_batch(
+            build_state(proj, self.pk_cols, self.value_col),
+            batch_id,
+            lambda prev, delta: merge_states(
+                [delta] if prev is None else [delta, prev], self.pk_cols
+            ),
+            "rollup merge batch",
+            skip_replay=self.idempotent,
         )
-        try:
-            touched = sorted(
-                r["__p"] for r in delta.select("__p").distinct().collect()
-            )
-            if not touched:
-                return
-            os.makedirs(self.target_dir, exist_ok=True)
-            self._check_layout(create=True)
-            self._sweep_batchtmps()
-            prev_parts: list[int] = []
-            for p in touched:
-                pdir = self._part_dir(p)
-                self._recover_part(pdir)
-                if os.path.exists(pdir):
-                    prev_parts.append(p)
-            prev = None
-            if prev_parts:
-                prev = self._read_parts(prev_parts).withColumn(
-                    "__p", self._part_expr()
-                )
-            skip: set[int] = set()
-            if self.idempotent and prev is not None and batch_id is not None:
-                # per-partition replay guard: __bid is constant within a
-                # partition generation; a partition whose stored id is
-                # >= this batch already merged it (crash mid-swap)
-                done = {
-                    r["__p"]: r["b"]
-                    for r in prev.groupBy("__p").agg(F.max("__bid").alias("b")).collect()
-                }
-                skip = {p for p, b in done.items() if b is not None and batch_id <= b}
-                if skip:
-                    delta_live = delta.filter(~F.col("__p").isin([int(s) for s in skip]))
-                    prev = prev.filter(~F.col("__p").isin([int(s) for s in skip]))
-                else:
-                    delta_live = delta
-                prev = prev.drop("__bid")
-            else:
-                delta_live = delta
-            live_touched = [p for p in touched if p not in skip]
-            if not live_touched:
-                return
-            states = [delta_live.drop("__p")]
-            if prev is not None:
-                states.append(prev.drop("__p"))
-            merged = merge_states(states, self.pk_cols).withColumn(
-                "__p", self._part_expr()
-            )
-            if self.idempotent:
-                merged = merged.withColumn("__bid", F.lit(int(batch_id or 0)))
-            self._swap_parts(merged, live_touched)
-        finally:
-            delta.unpersist()
-
-    def result(self) -> DataFrame | None:
-        st = self.read_target()
-        if st is None:
-            return None
-        if self.idempotent and "__bid" in st.columns:
-            st = st.drop("__bid")
-        return finalize(st, self.pk_cols)

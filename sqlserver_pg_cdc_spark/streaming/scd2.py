@@ -27,8 +27,6 @@ recomputation of validity chains for affected keys only.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -214,28 +212,25 @@ class PartitionedScd2Sink:
 
     ``Scd2ParquetSink`` reads and swaps the ENTIRE history every
     micro-batch: O(history) per batch against a table that grows without
-    bound (every version of every row, forever) — the worst possible
-    table to rewrite per batch. Here the history lives in
-    ``n_partitions`` independent ``part_NNNNN/`` directories keyed by
-    ``pmod(xxhash64(*pk), n_partitions)`` (the
-    ``HashPartitionedStateMixin`` discipline the flat CDC target and the
-    streamed ANN index already ride); a batch
+    bound. Here the history lives in ``n_partitions`` hash partitions
+    (the ``HashPartitionedStateMixin`` store the upsert and rollup sinks
+    share); a batch
 
     1. routes its rows by PK hash and collects the distinct partition
        ids it touches (bounded by ``n_partitions``, never by data),
-    2. reads ONLY the touched partitions of prior history,
+    2. reads ONLY the touched partitions of the committed history,
     3. runs :func:`scd2_apply` against that slice — the apply step
        already confines version-chain surgery to the batch's keys, and
        every key in the slice hashes back into a touched partition —
-    4. rewrites ONLY those partitions (one hive-style ``partitionBy``
-       job + one rename-swap per touched partition).
+    4. commits the rewritten partitions as one new manifest version.
 
-    Per-batch work is O(batch + touched partitions), not O(history).
-    Replays converge without batch-id bookkeeping: ``scd2_apply`` drops
-    batch versions whose (key, LSN) the stored history already holds, so
-    a crash between two partition swaps re-drives into both the
-    committed and uncommitted partitions harmlessly. Reference analog:
-    incremental reconciliation state applied per change batch,
+    Per-batch work is O(batch + touched partitions), not O(history),
+    and a reader sees the whole batch or none of it. The manifest
+    records the batch id, but replay is not skipped on it:
+    ``scd2_apply`` drops batch versions whose (key, LSN) the history
+    already holds, so a batch re-driven after a crash on either side of
+    the commit converges. Reference analog: incremental reconciliation
+    state applied per change batch,
     src/reconciliation/incremental/state.py:112-164.
     """
 
@@ -255,9 +250,8 @@ class PartitionedScd2Sink:
         )
 
         # composition over a private partitioned store: the mixin
-        # contributes layout guards, per-partition recovery, and the
-        # one-job multi-partition swap; the SCD2 apply replaces the
-        # upsert merge entirely.
+        # contributes the manifest, the guards and the batch path; the
+        # SCD2 apply replaces the upsert merge entirely.
         class _Store(HashPartitionedStateMixin, ParquetUpsertSink):
             pass
 
@@ -299,7 +293,7 @@ class PartitionedScd2Sink:
                 batch_id=batch_id,
                 target=self.target_dir,
             ):
-                self._apply(batch_df)
+                self._apply(batch_df, batch_id)
         except Exception as e:
             if self.dlq_dir is None:
                 raise
@@ -311,56 +305,15 @@ class PartitionedScd2Sink:
                 .parquet(self.dlq_dir)
             )
 
-    def _apply(self, batch_df: DataFrame) -> None:
-        from sqlserver_pg_cdc_spark.streaming.lock import writer_beacon
-
-        # two-way single-writer enforcement: fail fast while
-        # prune_history (or any pass) holds the lock, and hold a writer
-        # beacon so a pass cannot start mid-batch either
-        with writer_beacon(self.target_dir, "SCD2 apply batch"):
-            self._apply_guarded(batch_df)
-
-    def _apply_guarded(self, batch_df: DataFrame) -> None:
-        import os
-
-        st = self._store
-        # hash the STORED key dtypes (xxhash64 is type-sensitive): a
-        # batch whose key column arrives as int32 against a long-keyed
-        # history (or vice versa) must route identically to prior writes
-        routed = (
-            st._cast_keys_to_stored(batch_df)
-            .withColumn("__p", st._part_expr())
-            .persist()
+    def _apply(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
+        self._store._merge_batch(
+            batch_df,
+            batch_id,
+            lambda prev, batch: scd2_apply(
+                prev, batch, self.pk_cols, lsn_col=self.lsn_col, op_col=self.op_col
+            ),
+            "SCD2 apply batch",
         )
-        try:
-            touched = sorted(
-                r["__p"] for r in routed.select("__p").distinct().collect()
-            )
-            if not touched:
-                return
-            os.makedirs(self.target_dir, exist_ok=True)
-            st._check_layout(create=True)
-            st._sweep_batchtmps()
-            prev_parts: list[int] = []
-            for p in touched:
-                pdir = st._part_dir(p)
-                st._recover_part(pdir)
-                if os.path.exists(pdir):
-                    prev_parts.append(p)
-            prev = None
-            if prev_parts:
-                prev = st._read_parts(prev_parts)  # mergeSchema: evolved
-            new_slice = scd2_apply(
-                prev,
-                routed.drop("__p"),
-                self.pk_cols,
-                lsn_col=self.lsn_col,
-                op_col=self.op_col,
-            )
-            st._stamp_schema(new_slice)
-            st._swap_parts(new_slice.withColumn("__p", st._part_expr()), touched)
-        finally:
-            routed.unpersist()
 
     # -- day-2 maintenance ---------------------------------------------------
 
@@ -380,69 +333,19 @@ class PartitionedScd2Sink:
         untouched. The reference bounds the same liability with change-
         event retention (docs/development-architecture.md:226).
 
-        One O(history) pass; rewrites only partitions that held prunable
-        versions (generation swap each). Returns
-        ``{"pruned": n, "partitions_rewritten": k}``.
-
-        Concurrency: run on a QUIESCED history (no concurrent apply
-        batches), like :meth:`rescale` — the stats pass and the rewrite
-        pass re-read the partition files, so a concurrent writer
-        swapping a partition between the passes would be silently
-        overwritten with this op's stale snapshot. Single writer only —
-        ENFORCED since round 10 via the ``__maintenance.lock`` sentinel
-        (`streaming/lock.py`): concurrent applies fail fast; a crashed
-        pass leaves a lock that reads stale by pid/timestamp."""
+        One O(history) pass and one commit rewriting only the partitions
+        that held prunable versions (a partition pruned to empty leaves
+        the manifest). Returns ``{"pruned": n, "partitions_rewritten":
+        k}``. Holds the maintenance lock (`streaming/lock.py`), so apply
+        batches fail fast meanwhile."""
         from sqlserver_pg_cdc_spark.streaming.lock import maintenance_lock
 
+        wm = F.lit(int(watermark_lsn))
         with maintenance_lock(self.target_dir, "prune_history"):
-            return self._prune_history_locked(watermark_lsn)
-
-    def _prune_history_locked(self, watermark_lsn: int) -> dict:
-        st = self._store
-        st._check_layout()
-        h = st.read_target()
-        if h is None:
-            return {"pruned": 0, "partitions_rewritten": 0}
-        dead = F.coalesce(
-            F.col("__valid_to_lsn") <= F.lit(int(watermark_lsn)),
-            F.lit(False),
-        )
-        # NOT cached/checkpointed: the frame is HISTORY-sized (pinning
-        # it in executor storage is the liability this op shrinks) and
-        # its plan is a plain parquet scan — the two passes re-read the
-        # partition files; partition fates come from the SAME pre-swap
-        # stats pass (post-swap the original files are gone)
-        routed = h.withColumn("__p", st._part_expr()).withColumn(
-            "__dead", dead
-        )
-        stats = (
-            routed.groupBy("__p")
-            .agg(
-                F.sum(F.col("__dead").cast("long")).alias("__dead_n"),
-                F.count(F.lit(1)).alias("__tot"),
+            pruned, k = self._store._drop_rows(
+                lambda h: F.coalesce(F.col("__valid_to_lsn") <= wm, F.lit(False))
             )
-            .collect()
-        )
-        hit = sorted(r["__p"] for r in stats if r["__dead_n"] > 0)
-        if not hit:
-            return {"pruned": 0, "partitions_rewritten": 0}
-        pruned = sum(r["__dead_n"] for r in stats)
-        emptied = {
-            r["__p"]
-            for r in stats
-            if r["__dead_n"] > 0 and r["__tot"] == r["__dead_n"]
-        }
-        keep = routed.filter(F.col("__p").isin(hit) & ~F.col("__dead")).drop(
-            "__dead"
-        )
-        st._swap_parts(keep, sorted(hit))
-        for p in emptied:
-            pdir = st._part_dir(p)
-            if os.path.isdir(pdir):
-                import shutil
-
-                shutil.rmtree(pdir, ignore_errors=True)
-        return {"pruned": pruned, "partitions_rewritten": len(hit)}
+        return {"pruned": pruned, "partitions_rewritten": k}
 
     def rescale(self, n_new: int) -> None:
         """Re-hash the history into ``n_new`` partitions (the

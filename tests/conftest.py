@@ -93,3 +93,67 @@ def load(spark, table, sf_dir=SF_DIR):
     from sqlserver_pg_cdc_spark.sources.parquet import load_table
 
     return load_table(spark, sf_dir, table)
+
+
+@pytest.fixture
+def at_commit_step(monkeypatch):
+    """Arm ``fn()`` to run once at one step of the next commit of a
+    hash-partitioned state (`HashPartitionedStateMixin._commit`); with
+    no ``fn`` the step raises ``RuntimeError("injected crash ...")``:
+
+    - "after_write": the batch temp is written, nothing renamed;
+    - "mid_rename": one generation directory renamed, the rest not;
+    - "after_renames": every generation renamed, no version linked;
+    - "after_link": the version is committed, nothing cleaned up;
+    - "mid_gc": part of the cleanup done.
+
+    "mid_rename" needs a batch touching two partitions or more, and
+    "mid_gc" one that supersedes at least one generation."""
+    import shutil
+
+    from sqlserver_pg_cdc_spark.streaming.apply import HashPartitionedStateMixin
+
+    armed = {"step": None, "fn": None, "renames": 0, "rmtrees": 0}
+    rename, link, rmtree = os.rename, os.link, shutil.rmtree
+    gc = HashPartitionedStateMixin._gc
+
+    def fire(step):
+        if step is not None and armed["step"] == step:
+            armed["step"] = None
+            armed["fn"]()
+
+    def _rename(src, dst, *a, **k):
+        if "__batchtmp_" in str(src):
+            armed["renames"] += 1
+            fire({1: "after_write", 2: "mid_rename"}.get(armed["renames"]))
+        return rename(src, dst, *a, **k)
+
+    def _link(src, dst, *a, **k):
+        fire("after_renames")
+        return link(src, dst, *a, **k)
+
+    def _gc(self, body):
+        fire("after_link")
+        armed["rmtrees"] = 0
+        return gc(self, body)
+
+    def _rmtree(path, *a, **k):
+        if os.path.basename(str(path)).startswith(("part_", "__batchtmp_")):
+            armed["rmtrees"] += 1
+            if armed["rmtrees"] == 2:
+                fire("mid_gc")
+        return rmtree(path, *a, **k)
+
+    monkeypatch.setattr(os, "rename", _rename)
+    monkeypatch.setattr(os, "link", _link)
+    monkeypatch.setattr(shutil, "rmtree", _rmtree)
+    monkeypatch.setattr(HashPartitionedStateMixin, "_gc", _gc)
+
+    def crash(step):
+        raise RuntimeError(f"injected crash {step}")
+
+    def arm(step, fn=None):
+        fn = fn or (lambda: crash(step))
+        armed.update(step=step, fn=fn, renames=0, rmtrees=0)
+
+    return arm

@@ -221,14 +221,13 @@ def test_partitioned_sink_idempotent_replay_per_partition(spark, frame, tmp_path
     assert got == want
 
 
-def test_partitioned_sink_partial_crash_recovery(spark, tmp_path):
-    """Crash mid-swap on ONE partition (its dir renamed to __old, new
-    generation lost): the next touch of that partition must restore the
-    pre-batch generation, and with idempotent=True a full batch replay
-    must re-merge ONLY the partition that lost the batch."""
-    import glob
+def test_partitioned_sink_partial_crash_recovery(spark, tmp_path, at_commit_step):
+    """Crash mid-commit (one partition's new generation renamed, the
+    rest not, no version committed): the state still reads as before
+    the batch, and with idempotent=True a full batch replay must merge
+    the lost batch exactly once — then a second replay of the now
+    committed batch rewrites no partition at all."""
     import os
-    import shutil
 
     from sqlserver_pg_cdc_spark.streaming.rollup import PartitionedContinuousAggSink
 
@@ -240,37 +239,26 @@ def test_partitioned_sink_partial_crash_recovery(spark, tmp_path):
         spark, state, KEYS, "value", idempotent=True, n_partitions=8
     )
     sink(base, 0)
+    want_pre = _final(sink.result())
     batch1 = spark.createDataFrame(
         [(i, 1000.0) for i in range(64)], "k int, value double"
     )
-    sink(batch1, 1)
-    # simulate crash: one partition's batch-1 generation vanishes, its
-    # pre-batch generation is stranded as __old
-    victim = sorted(glob.glob(os.path.join(state, "part_[0-9]*")))[0]
-    # rebuild the pre-batch generation for the victim by replaying batch 0
-    # into a scratch sink, then stranding it as __old
-    scratch = str(tmp_path / "scratch")
-    s2 = PartitionedContinuousAggSink(
-        spark, scratch, KEYS, "value", idempotent=True, n_partitions=8
-    )
-    s2(base, 0)
-    old_src = os.path.join(scratch, os.path.basename(victim))
-    shutil.rmtree(victim)
-    shutil.copytree(old_src, f"{victim}__old_cafe01")
-    # replay batch 1: the victim (recovered to its batch-0 state, __bid=0)
-    # must merge; every other partition (__bid=1) must skip
-    snap_others = {
-        d: f for d, f in _part_files(state).items() if d != victim
-    }
-    sink(batch1, 1)
-    after = _part_files(state)
-    for d, f in snap_others.items():
-        assert after[d] == f, f"untouched partition rewritten: {d}"
+    at_commit_step("mid_rename")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sink(batch1, 1)
+    assert _final(sink.result()) == want_pre
+    sink(batch1, 1)  # replay: batch 1 never committed, so it merges
     want = _final(
         CA.finalize(
             CA.build_state(base.unionByName(batch1), KEYS, "value"), KEYS
         )
     )
+    assert _final(sink.result()) == want
+    # replay of the committed batch: skipped whole, nothing rewritten
+    snap = _part_files(state)
+    sink(batch1, 1)
+    assert _part_files(state) == snap
+    assert not [d for d in os.listdir(state) if d.startswith("__batchtmp_")]
     assert _final(sink.result()) == want
 
 
@@ -352,8 +340,9 @@ def test_partitioned_sink_rejects_partition_count_mismatch(spark, frame, tmp_pat
 
 def test_partitioned_sink_sweeps_orphan_batchtmp(spark, frame, tmp_path):
     """A crash between the partitionBy write and its cleanup strands a
-    __batchtmp_* dir at the state root; the next batch (and any read)
-    must sweep it rather than let orphans accumulate forever."""
+    __batchtmp_* dir at the state root; the next batch must sweep it
+    rather than let orphans accumulate forever (reads never touch the
+    directory)."""
     import os
 
     from sqlserver_pg_cdc_spark.streaming.rollup import PartitionedContinuousAggSink

@@ -285,30 +285,6 @@ def test_markers_are_siblings_and_survive_rescale_swap(spark, tmp_path):
         assert not os.path.isdir(sdir)  # beacons don't materialize it
 
 
-def test_recover_rescale_never_deletes_completed_layout_for_husk(
-    spark, tmp_path
-):
-    """Round-10 ADVICE (medium), recovery half: a husk target (no
-    layout marker, no partitions) with a completed __rescale_new_*
-    sibling adopts the new layout instead of rmtree'ing it."""
-    sink = _sink(spark, tmp_path, name="rz", n=4)
-    sink(_rows(spark, range(8)), 0)
-    sdir = str(tmp_path / "rz")
-    # simulate the pre-fix crash: completed new layout built, target
-    # recreated as a husk between the swap's two renames
-    import shutil
-
-    shutil.move(sdir, sdir + ".__rescale_new_deadbeef")
-    open(
-        os.path.join(sdir + ".__rescale_new_deadbeef", "__rescale_complete"),
-        "w",
-    ).close()
-    os.makedirs(sdir)  # the husk
-    sink._recover_rescale()
-    assert sink.read_target().count() == 8  # adopted, not deleted
-    assert not os.path.isdir(sdir + ".__rescale_new_deadbeef")
-
-
 def test_heartbeat_keeps_long_passes_live(tmp_path):
     """Round-10 ADVICE: a pass running longer than stale_after_s used
     to be judged stale (ts written once) — writers would walk through
@@ -423,27 +399,30 @@ def test_pre_family_media_state_names_the_migration(spark, tmp_path):
         0,
     )
     # simulate the pre-change layout faithfully: rewrite every state
-    # partition without the family column AND demote the layout marker
-    # to the legacy stamp shape (pre-round-12 markers carry no
-    # schema_union flag — the union-stamp fast read only trusts flagged
-    # markers, so a real legacy state always reads via mergeSchema and
-    # exposes the missing column; only the marker written by THIS
-    # version knows about family at all)
-    import glob
-    import json
+    # partition without the family column AND commit a manifest version
+    # whose (validly hashed) schema never knew about it — a real legacy
+    # state read through its own manifest exposes the missing column
     import shutil
 
-    for p in sorted(glob.glob(str(tmp_path / "fpx" / "part_*"))):
+    from sqlserver_pg_cdc_spark.streaming.apply import (
+        _manifest_sha,
+        read_manifest,
+    )
+
+    sdir = str(tmp_path / "fpx")
+    meta = read_manifest(sdir)
+    for gen in meta["parts"].values():
+        p = os.path.join(sdir, gen)
         old = spark.read.parquet(p).drop("family")
         old.write.mode("overwrite").parquet(p + ".new")
         shutil.rmtree(p)
         os.rename(p + ".new", p)
-    marker = os.path.join(str(tmp_path / "fpx"), sink._LAYOUT_FILE)
-    with open(marker) as f:
-        meta = json.load(f)
-    for k in ("schema", "schema_union", "schema_sha256", "schema_version"):
-        meta.pop(k, None)
-    with open(marker, "w") as f:
+    meta["schema"]["fields"] = [
+        f for f in meta["schema"]["fields"] if f["name"] != "family"
+    ]
+    meta["version"] += 1
+    meta["sha256"] = _manifest_sha(meta)
+    with open(os.path.join(sdir, "_log", f"{meta['version']:020d}.json"), "w") as f:
         json.dump(meta, f)
     with pytest.raises(ValueError, match="family"):
         sink.fingerprints()

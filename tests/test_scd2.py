@@ -176,22 +176,27 @@ def test_partitioned_scd2_replay_idempotent_by_key_lsn(spark, tmp_path):
     assert _hist_set(part.history()) == want
 
 
-def test_partitioned_scd2_crash_between_partition_swaps(spark, tmp_path):
-    """Crash after one partition committed but another did not: the
-    re-driven batch converges ((key, LSN) dedup absorbs the committed
-    partition, normal apply fills the restored one); a stranded
-    __batchtmp is swept."""
+def test_partitioned_scd2_crash_between_partition_swaps(
+    spark, tmp_path, at_commit_step
+):
+    """Crash after one partition's new generation landed but another's
+    did not: the re-driven batch converges (the uncommitted generation
+    is ignored, the apply runs again); every stranded __batchtmp is
+    swept."""
     import os
+
+    import pytest
 
     part = _psink(spark, tmp_path)
     part(_batch(spark, [(i, f"n{i}", 10 + i, "c") for i in range(60)]), 0)
     want_pre = _hist_set(part.history())
     b1 = _batch(spark, [(i, f"u{i}", 500 + i, "u") for i in range(0, 60, 7)])
 
-    pdirs = sorted((tmp_path / "phist").glob("part_*"))
-    victim = str(pdirs[0])
-    os.rename(victim, victim + "__old_cafe")
     os.makedirs(str(tmp_path / "phist" / "__batchtmp_dead" / "__p=0"))
+    at_commit_step("mid_rename")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        part(b1, 1)
+    assert _hist_set(part.history()) == want_pre
 
     part(b1, 1)  # re-driven batch
     got = _hist_set(part.history())

@@ -16,9 +16,21 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sqlserver_pg_cdc_spark.streaming.apply import read_manifest
+
 
 def _b(spark, recs, schema):
     return spark.createDataFrame(recs, schema)
+
+
+def _fields(manifest):
+    """{column: JSON type} of a committed manifest's schema."""
+    return {f["name"]: f["type"] for f in manifest["schema"]["fields"]}
+
+
+def _latest_version_path(state_dir):
+    log = os.path.join(state_dir, "_log")
+    return os.path.join(log, max(n for n in os.listdir(log) if n.endswith(".json")))
 
 
 OLD = "id long, name string, lsn long"
@@ -61,8 +73,6 @@ def test_partitioned_upsert_additive_evolution(spark, tmp_path):
     """The partitioned sink rewrites only TOUCHED partitions: after an
     evolving batch, untouched partitions keep the old footer schema and
     the merged read must still surface the new column (NULL there)."""
-    import json
-
     from sqlserver_pg_cdc_spark.streaming.apply import (
         PartitionedParquetUpsertSink,
     )
@@ -82,53 +92,49 @@ def test_partitioned_upsert_additive_evolution(spark, tmp_path):
     # point lookup through mixed-schema partitions
     pl = {r["id"]: r["name"] for r in sink.read_keys([3, 7]).collect()}
     assert pl == {3: "n3e", 7: "n7"}
-    # layout marker stamped with the active schema + a version
-    with open(str(tmp_path / "p" / "__layout.json")) as f:
-        meta = json.load(f)
-    assert meta["schema"]["email"] == "string"
-    assert meta["schema_version"] >= 1
+    # the committed manifest carries the active schema + a version
+    meta = read_manifest(str(tmp_path / "p"))
+    assert _fields(meta)["email"] == "string"
+    assert meta["version"] >= 1
 
 
 def test_schema_stamp_hash_guard(spark, tmp_path):
-    """r8 verdict #8: the layout marker's schema stamp is a guarded
-    identity — every stamp carries a sha256 over (schema, version); an
-    evolved state reopened by a fresh sink validates, and a tampered
-    marker fails fast at open."""
+    """r8 verdict #8: the manifest's schema is a guarded identity —
+    every version carries a sha256 over its body; an evolved state
+    reopened by a fresh sink validates, and a tampered manifest fails
+    fast at open."""
     import json
 
     from sqlserver_pg_cdc_spark.streaming.apply import (
         PartitionedParquetUpsertSink,
+        _manifest_sha,
     )
 
-    sink = PartitionedParquetUpsertSink(
-        spark, str(tmp_path / "g"), ["id"], n_partitions=4
-    )
+    target = str(tmp_path / "g")
+    sink = PartitionedParquetUpsertSink(spark, target, ["id"], n_partitions=4)
     sink(_b(spark, [(i, f"n{i}", 1) for i in range(10)], OLD), 0)
     sink(_b(spark, [(3, "n3e", "e3@x.com", 2)], NEW), 1)  # evolution event
-    marker = str(tmp_path / "g" / "__layout.json")
-    with open(marker) as f:
-        meta = json.load(f)
-    assert meta["schema_sha256"] == PartitionedParquetUpsertSink._schema_sha(
-        meta["schema"], meta["schema_version"]
-    )
+    meta = read_manifest(target)
+    assert meta["sha256"] == _manifest_sha(meta)
     # a fresh sink adopting the evolved state validates cleanly
-    fresh = PartitionedParquetUpsertSink(
-        spark, str(tmp_path / "g"), ["id"], n_partitions=4
-    )
+    fresh = PartitionedParquetUpsertSink(spark, target, ["id"], n_partitions=4)
     assert fresh.read_target().count() == 10
-    # rescale carries the stamp (and its hash) into the new layout
+    # rescale carries the schema into the new layout, under a valid hash
     fresh.rescale(8)
-    with open(marker) as f:
-        meta2 = json.load(f)
-    assert meta2["schema_sha256"] == meta["schema_sha256"]
+    meta2 = read_manifest(target)
+    assert meta2["schema"] == meta["schema"]
+    assert meta2["sha256"] == _manifest_sha(meta2)
     assert fresh.read_target().count() == 10
     # tampering the schema without re-hashing fails fast at open
-    meta2["schema"]["email"] = "int"
-    with open(marker, "w") as f:
+    assert "email" in _fields(meta2)
+    for f in meta2["schema"]["fields"]:
+        if f["name"] == "email":
+            f["type"] = "integer"
+    with open(_latest_version_path(target), "w") as f:
         json.dump(meta2, f)
     with pytest.raises(ValueError, match="tampered"):
         PartitionedParquetUpsertSink(
-            spark, str(tmp_path / "g"), ["id"], n_partitions=8
+            spark, target, ["id"], n_partitions=8
         ).read_target()
 
 
@@ -231,14 +237,12 @@ def test_pipeline_dlq_on_mid_stream_type_change(spark, tmp_path):
 
 
 def test_partitioned_stamp_unions_across_partial_evolution(spark, tmp_path):
-    """The layout marker's schema stamp must UNION each write's
-    post-merge schema, never overwrite: a post-evolution batch that
-    touches only pre-evolution partitions carries the narrow schema,
-    and an overwrite stamp would shrink below what evolved partitions
-    hold on disk — the footer-free explicit-schema read would then
-    silently drop the evolved column for the whole state."""
-    import json
-
+    """The manifest's schema must UNION each write's post-merge schema,
+    never overwrite: a post-evolution batch that touches only
+    pre-evolution partitions carries the narrow schema, and an
+    overwritten schema would shrink below what evolved partitions hold
+    on disk — the footer-free explicit-schema read would then silently
+    drop the evolved column for the whole state."""
     from sqlserver_pg_cdc_spark.streaming.apply import (
         PartitionedParquetUpsertSink,
     )
@@ -262,12 +266,8 @@ def test_partitioned_stamp_unions_across_partial_evolution(spark, tmp_path):
     }
     other = next(k for k in range(2, 16) if parts[k] != parts[1])
     sink(_b(spark, [(other, "narrow", 3)], OLD), 2)
-    # stamp: union flag set, evolved column retained despite the
-    # narrow last write
-    with open(os.path.join(target, sink._LAYOUT_FILE)) as f:
-        meta = json.load(f)
-    assert meta.get("schema_union") is True
-    assert "email" in meta["schema"]
+    # the evolved column is retained despite the narrow last write
+    assert "email" in _fields(read_manifest(target))
     # footer-free read surfaces the evolved column with the evolved
     # value, NULL elsewhere — byte-identical to a mergeSchema read
     st = {r["id"]: (r["name"], r["email"]) for r in sink.read_target().collect()}
@@ -290,11 +290,11 @@ def test_partitioned_stamp_unions_across_partial_evolution(spark, tmp_path):
 
 
 def test_stored_pk_types_ignores_unverified_stamp(spark, tmp_path):
-    """round-12 ADVICE: `_stored_pk_types` must trust the marker's
-    schema stamp only when its sha256 covers it — probe paths
-    (`_cast_keys_to_stored`) run before `_check_layout`'s tamper guard,
-    so a hand-edited stamp would otherwise feed a wrong pk cast type
-    into the xxhash64 partition routing (silent lookup misses)."""
+    """round-12 ADVICE: `_stored_pk_types` must trust the manifest's
+    schema only when its sha256 covers it — probe paths
+    (`_cast_keys_to_stored`) feed it into the xxhash64 partition
+    routing, so a hand-edited type would cause silent lookup misses.
+    The unverified manifest is refused outright."""
     import json
 
     from sqlserver_pg_cdc_spark.streaming.apply import (
@@ -305,52 +305,15 @@ def test_stored_pk_types_ignores_unverified_stamp(spark, tmp_path):
     sink = PartitionedParquetUpsertSink(spark, target, ["id"], n_partitions=4)
     sink(_b(spark, [(i, f"n{i}", 1) for i in range(8)], OLD), 0)
     assert sink._stored_pk_types() == {"id": "bigint"}
-    marker = os.path.join(target, sink._LAYOUT_FILE)
-    with open(marker) as f:
-        meta = json.load(f)
-    # tamper the stamped pk type without re-hashing
-    meta["schema"]["id"] = "int"
-    with open(marker, "w") as f:
+    meta = read_manifest(target)
+    # tamper the committed pk type without re-hashing
+    for f in meta["schema"]["fields"]:
+        if f["name"] == "id":
+            f["type"] = "integer"
+    with open(_latest_version_path(target), "w") as f:
         json.dump(meta, f)
-    # the unverified stamp is rejected; the footer stays authoritative
-    assert sink._stored_pk_types() == {"id": "bigint"}
-
-
-def test_stamped_schema_rejects_pre_union_rollback(spark, tmp_path):
-    """round-12 ADVICE: an OLD (pre-union) binary writing to a
-    union-flagged state rewrites schema/version/sha256 under its
-    overwrite rule — possibly NARROWING the stamp below a footer —
-    while preserving the unknown schema_union* keys. The footer-free
-    read must reject that stamp (the union-aware sha no longer
-    matches) and fall back to mergeSchema, so evolved columns that
-    remain in footers still surface."""
-    import json
-
-    from sqlserver_pg_cdc_spark.streaming.apply import (
-        PartitionedParquetUpsertSink,
-    )
-
-    target = str(tmp_path / "t")
-    sink = PartitionedParquetUpsertSink(spark, target, ["id"], n_partitions=4)
-    sink(_b(spark, [(i, f"n{i}", 1) for i in range(8)], OLD), 0)
-    sink(_b(spark, [(1, "n1b", "one@x.com", 2)], NEW), 1)  # evolution
-    assert sink._stamped_schema() is not None
-    marker = os.path.join(target, sink._LAYOUT_FILE)
-    with open(marker) as f:
-        meta = json.load(f)
-    # simulate the old binary's overwrite-rule stamp: narrowed schema,
-    # bumped version, valid PLAIN sha, union keys preserved untouched
-    narrowed = {"id": "bigint", "name": "string", "lsn": "long"}
-    meta["schema"] = narrowed
-    meta["schema_version"] = int(meta["schema_version"]) + 1
-    meta["schema_sha256"] = PartitionedParquetUpsertSink._schema_sha(
-        narrowed, meta["schema_version"]
-    )
-    with open(marker, "w") as f:
-        json.dump(meta, f)
-    # union-aware hash no longer matches -> no footer-free fast read
-    assert sink._stamped_schema() is None
-    # the mergeSchema fallback still surfaces the evolved column
-    st = {r["id"]: (r["name"], r["email"]) for r in sink.read_target().collect()}
-    assert st[1] == ("n1b", "one@x.com")
-    assert st[3] == ("n3", None)
+    # the unverified type never reaches the routing
+    with pytest.raises(ValueError, match="tampered"):
+        sink._stored_pk_types()
+    with pytest.raises(ValueError, match="tampered"):
+        sink.read_keys([1])

@@ -266,43 +266,61 @@ def test_rescale_carries_aux_param_files(spark, tmp_path):
     assert {(r["a"], r["b"]) for r in probe_after.collect()} == pairs_before
 
 
-def test_rescale_crash_recovery_adopts_completed_new(spark, tmp_path):
-    """Crash between the two renames: target missing, completed new dir
-    present -> the next open adopts the new layout."""
-    import shutil
+def _debris(state_dir):
+    """Entries a commit would remove: batch temps and generation
+    directories the latest version does not name."""
+    from sqlserver_pg_cdc_spark.streaming.apply import read_manifest
 
+    live = set(read_manifest(state_dir)["parts"].values())
+    return sorted(
+        n
+        for n in os.listdir(state_dir)
+        if n.startswith("__batchtmp_") or (n.startswith("part_") and n not in live)
+    )
+
+
+def test_rescale_crash_recovery_adopts_completed_new(
+    spark, tmp_path, at_commit_step
+):
+    """Crash right after the rescale's commit, before any cleanup: the
+    next open adopts the new layout, and the old layout's generations
+    are debris that the next write removes."""
     sink = _sink(spark, tmp_path, n=4)
     sink(_rows(spark, [(i, f"n{i}", "false", i) for i in range(20)]), 0)
     target = str(tmp_path / "st")
-    # build the completed new dir exactly as rescale would, then crash
-    # before the final rename by moving target away
-    sink.rescale(8)
-    # reconstruct the mid-crash state: move target to a new_ dir with
-    # the completion sentinel, as if the old->away rename happened but
-    # the new->target rename did not
-    os.rename(target, f"{target}.__rescale_new_deadbeef")
-    open(
-        f"{target}.__rescale_new_deadbeef/__rescale_complete", "w"
-    ).close()
+    at_commit_step("after_link")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sink.rescale(8)
+    assert _debris(target)  # the 4-partition generations and the temp
     fresh = _sink(spark, tmp_path, n=8)
     assert len(_live(fresh.read_target())) == 20
-    assert not os.path.exists(f"{target}.__rescale_new_deadbeef")
+    with pytest.raises(ValueError, match="n_partitions=8"):
+        _sink(spark, tmp_path, n=4).read_target()
+    fresh(_rows(spark, [(100, "new", "false", 100)]), 1)
+    assert _debris(target) == []
+    assert len(_live(fresh.read_target())) == 21
 
 
 def test_rescale_crash_recovery_restores_old_when_new_incomplete(
-    spark, tmp_path
+    spark, tmp_path, at_commit_step
 ):
-    """Crash during the new-layout build: target gone (simulated), only
-    an INCOMPLETE new dir and the old dir remain -> old is restored."""
+    """Crash after the new layout was written and renamed but before
+    its commit: the next open keeps the old layout, and the new
+    layout's generations are debris that the next write removes."""
     sink = _sink(spark, tmp_path, n=4)
     sink(_rows(spark, [(i, f"n{i}", "false", i) for i in range(20)]), 0)
     target = str(tmp_path / "st")
-    os.rename(target, f"{target}.__rescale_old_cafe0000")
-    os.makedirs(f"{target}.__rescale_new_cafe0000")  # no sentinel
+    at_commit_step("after_renames")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sink.rescale(8)
+    assert _debris(target)  # the 8-partition generations and the temp
     fresh = _sink(spark, tmp_path, n=4)
     assert len(_live(fresh.read_target())) == 20
-    assert not os.path.exists(f"{target}.__rescale_old_cafe0000")
-    assert not os.path.exists(f"{target}.__rescale_new_cafe0000")
+    with pytest.raises(ValueError, match="n_partitions=4"):
+        _sink(spark, tmp_path, n=8).read_target()
+    fresh(_rows(spark, [(100, "new", "false", 100)]), 1)
+    assert _debris(target) == []
+    assert len(_live(fresh.read_target())) == 21
 
 
 # --- SCD2 history retention -------------------------------------------------

@@ -470,10 +470,12 @@ def test_partitioned_upsert_replay_converges_via_lsn_guard(spark, tmp_path):
     assert _as_map(part.read_target()) == want
 
 
-def test_partitioned_upsert_crash_between_partition_swaps(spark, tmp_path):
-    """Crash after one partition committed but another did not: the
-    re-driven batch must converge (LSN guard absorbs the committed
-    partition, normal merge fills the lost one) and a stranded
+def test_partitioned_upsert_crash_between_partition_swaps(
+    spark, tmp_path, at_commit_step
+):
+    """Crash after one partition's new generation landed but another's
+    did not: the re-driven batch must converge (the uncommitted
+    generation is ignored, the merge runs again) and every stranded
     __batchtmp is swept."""
     part = _part_sink(spark, tmp_path)
     b0 = _rows(spark, [(i, f"n{i}", float(i), 10 + i) for i in range(60)])
@@ -481,12 +483,13 @@ def test_partitioned_upsert_crash_between_partition_swaps(spark, tmp_path):
     want_pre = _as_map(part.read_target())
     b1 = _rows(spark, [(i, f"u{i}", -1.0, 500 + i) for i in range(0, 60, 7)])
 
-    # simulate the crash window: one partition swapped to __old with no
-    # replacement (rename 1 of 2 done), plus an orphaned batchtmp
-    pdirs = sorted((tmp_path / "ptarget").glob("part_*"))
-    victim = str(pdirs[0])
-    os.rename(victim, victim + "__old_cafe")
+    # the crash window: one generation renamed out of the batch temp,
+    # the rest not, no version committed; plus an older orphaned temp
     os.makedirs(str(tmp_path / "ptarget" / "__batchtmp_dead" / "__p=0"))
+    at_commit_step("mid_rename")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        part(b1, 1)
+    assert _as_map(part.read_target()) == want_pre
 
     part(b1, 1)  # re-driven batch
     got = _as_map(part.read_target())
@@ -496,6 +499,43 @@ def test_partitioned_upsert_crash_between_partition_swaps(spark, tmp_path):
             assert got[i] == (f"u{i}", -1.0, 500 + i)
         else:
             assert got[i] == want_pre[i]
+
+
+def test_partitioned_upsert_reader_mid_batch_never_loses_the_batch(
+    spark, tmp_path, monkeypatch
+):
+    """Regression: a second handle's read_target() landing between the
+    batch's partitionBy write and its commit must neither see part of
+    the batch nor destroy it. A reader that swept the live batch temp
+    made the writer find every partition "merged to nothing" and return
+    without error with none of the batch applied."""
+    part = _part_sink(spark, tmp_path)
+    part(_rows(spark, [(i, f"n{i}", float(i), 10 + i) for i in range(20)]), 0)
+    want_pre = _as_map(part.read_target())
+    reader = _part_sink(spark, tmp_path)
+    seen = []
+    isdir, rename = os.path.isdir, os.rename
+
+    def read_once(path):
+        if not seen and "__batchtmp_" in str(path) and "__p=" in str(path):
+            seen.append(_as_map(reader.read_target()))
+
+    def _isdir(path):
+        read_once(path)
+        return isdir(path)
+
+    def _rename(src, dst, *a, **k):
+        read_once(src)
+        return rename(src, dst, *a, **k)
+
+    monkeypatch.setattr(os.path, "isdir", _isdir)
+    monkeypatch.setattr(os, "rename", _rename)
+    part(_rows(spark, [(i, f"u{i}", -1.0, 500 + i) for i in range(20)]), 1)
+    monkeypatch.undo()
+    assert seen == [want_pre]  # the reader ran mid-batch, saw pre-batch
+    got = _as_map(part.read_target())
+    updated = [i for i in range(20) if got[i] == (f"u{i}", -1.0, 500 + i)]
+    assert len(updated) == 20
 
 
 def test_partitioned_upsert_layout_guards(spark, tmp_path):
@@ -547,16 +587,18 @@ def test_partitioned_upsert_end_to_end_pipeline(spark, tmp_path):
 
 
 def test_partitioned_upsert_rejects_markerless_partitioned_state(spark, tmp_path):
-    """part_* dirs without a __layout.json marker cannot be adopted —
-    their partition count is unknowable, and stamping the current count
-    could split a key across two partitions."""
+    """part_* dirs without a _log/ manifest cannot be adopted — their
+    partition count and live files are unknowable, and assuming the
+    current count could split a key across two partitions."""
+    import shutil as _sh
+
     part = _part_sink(spark, tmp_path, n=8)
     part(_rows(spark, [(i, f"n{i}", float(i), i) for i in range(20)]), 0)
-    os.remove(str(tmp_path / "ptarget" / "__layout.json"))
+    _sh.rmtree(str(tmp_path / "ptarget" / "_log"))
     fresh = _part_sink(spark, tmp_path, n=8)
-    with pytest.raises(ValueError, match="no __layout.json"):
+    with pytest.raises(ValueError, match="no _log/ manifest"):
         fresh.read_target()
-    with pytest.raises(ValueError, match="no __layout.json"):
+    with pytest.raises(ValueError, match="no _log/ manifest"):
         fresh(_rows(spark, [(1, "x", 1.0, 99)]), 1)
 
 
@@ -570,15 +612,20 @@ def test_partitioned_upsert_point_lookup_prunes_partitions(spark, tmp_path):
     part(_rows(spark, [(i, f"n{i}", float(i), i) for i in range(200)]), 0)
     hit = part._parts_for_keys([(7,), (13,)])
     assert 1 <= len(hit) <= 2
-    # remove all partitions NOT holding the keys: a pruned read survives
-    for p in part._existing_parts():
-        if p not in hit:
-            _sh.rmtree(part._part_dir(p))
-    got = {r["id"]: r["name"] for r in part.read_keys([7, 13]).collect()}
-    assert got == {7: "n7", 13: "n13"}
-    # missing key: no row, no error (None when its partition is absent)
+    # missing key: no row, no error
     res = part.read_keys([(999999,)])
     assert res is None or res.filter("id = 999999").count() == 0
+    # remove the generation dirs of all partitions NOT holding the keys
+    # (the manifest still names them, so a full read would fail): a
+    # pruned read survives
+    from sqlserver_pg_cdc_spark.streaming.apply import read_manifest
+
+    named = read_manifest(part.target_dir)["parts"]
+    for p in part._existing_parts():
+        if p not in hit:
+            _sh.rmtree(os.path.join(part.target_dir, named[str(p)]))
+    got = {r["id"]: r["name"] for r in part.read_keys([7, 13]).collect()}
+    assert got == {7: "n7", 13: "n13"}
 
 
 def test_partitioned_point_lookup_with_integer_typed_keys(spark, tmp_path):
