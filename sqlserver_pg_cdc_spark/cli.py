@@ -75,7 +75,7 @@ def create_parser() -> argparse.ArgumentParser:
                         help="hash-partition the parquet target into N "
                              "partitions; a batch rewrites only the "
                              "partitions it touches and commits them as "
-                             "one manifest version (0 = flat table)")
+                             "one manifest version (0 = one partition)")
     stream.add_argument("--transactional", action="store_true",
                         help="apply source transactions all-or-nothing "
                              "(provide.transaction.metadata parity)")
@@ -183,7 +183,7 @@ def create_parser() -> argparse.ArgumentParser:
     rollup.add_argument("--partitions", type=int, default=0,
                         help="hash-partition the state into N independent "
                              "partitions; a batch rewrites only the "
-                             "partitions it touches (0 = single state table)")
+                             "partitions it touches (0 = one partition)")
 
     sketch = sub.add_parser(
         "sketch",
@@ -555,7 +555,7 @@ def create_parser() -> argparse.ArgumentParser:
 
     state = sub.add_parser(
         "state",
-        help="day-2 maintenance on hash-partitioned sink state: "
+        help="day-2 maintenance on a sink state (flat or hash-partitioned): "
              "tombstone purge (retention) and partition-count rescale. "
              "ALL state ops require a quiesced state (stop concurrent "
              "streams first) — they are single-writer passes, ENFORCED "
@@ -804,7 +804,7 @@ def cmd_stream(args) -> int:
         if args.transactional:
             raise SystemExit(
                 "--partitions and --transactional are mutually exclusive "
-                "(the transactional sink applies through one atomic swap)"
+                "(the transactional sink keeps a one-partition state)"
             )
         from sqlserver_pg_cdc_spark.streaming.apply import (
             PartitionedParquetUpsertSink,
@@ -1095,12 +1095,19 @@ def cmd_decontam(args) -> int:
 
 def cmd_rollup(args) -> int:
     """One scheduled refresh of a materialized continuous aggregate:
-    scan ONLY the delta, build its state, merge into the persisted
-    state table (crash-recoverable swap), optionally emit the finalized
-    aggregate. Run per new partition — history is never re-read."""
+    scan ONLY the delta, build its state, merge it into the persisted
+    state (one manifest commit), optionally emit the finalized
+    aggregate. Run per new partition — history is never re-read.
+    ``--idempotent`` skips a refresh whose ``--batch-id`` is at or below
+    the committed one, so it needs an explicit id per refresh."""
     from sqlserver_pg_cdc_spark.session import get_spark
     from sqlserver_pg_cdc_spark.streaming.rollup import ContinuousAggSink
 
+    if args.idempotent and args.batch_id is None:
+        raise SystemExit(
+            "--idempotent needs --batch-id: without an increasing id per "
+            "refresh, every refresh after the first would be skipped"
+        )
     spark = get_spark("rollup-cli")
     if getattr(args, "partitions", 0):
         from sqlserver_pg_cdc_spark.streaming.rollup import (
@@ -2081,7 +2088,7 @@ def cmd_pipeline(args) -> int:
 
 
 def cmd_state(args) -> int:
-    """Day-2 maintenance: open the partitioned state with the partition
+    """Day-2 maintenance: open a sink state with the partition
     count its latest committed manifest version records (never guessed
     from a flag — a wrong count would mis-route every key), then purge
     and/or rescale."""
@@ -2096,7 +2103,7 @@ def cmd_state(args) -> int:
     if n_current is None:
         raise SystemExit(
             f"{args.state_dir} has no committed _log/ manifest — not a "
-            "partitioned sink state"
+            "sink state"
         )
     spark = get_spark("state-cli")
     result = {"state_dir": args.state_dir, "n_partitions": n_current}

@@ -201,9 +201,12 @@ class DbApiUpsertSink:
     against a live DBAPI target (PostgreSQL in the reference deployment,
     DuckDB/SQLite in tests — same statement shape).
 
-    Semantics match ParquetUpsertSink: within-batch dedup to the latest
-    LSN per key, then a per-row upsert whose LSN guard lives in the SQL,
-    so replays are no-ops at the database. Writes happen executor-side
+    The merge semantics match ParquetUpsertSink's: within-batch dedup to
+    the latest LSN per key, then a per-row upsert whose LSN guard lives
+    in the SQL, so replays are no-ops at the database. Visibility does
+    not: the parquet sink commits a batch as one manifest version, while
+    here each Spark partition commits its own transaction, so a reader
+    can see part of a batch. Writes happen executor-side
     via foreachPartition — nothing is collected to the driver, and a
     1000-partition batch opens 1000 pooled connections in parallel
     exactly like the reference's JDBC sink tasks. ``parallel=False``

@@ -15,10 +15,11 @@ idempotent keyed upsert inside ``foreachBatch``:
 - deletes are soft (rewrite mode): the row survives with
   ``__deleted='true'``.
 
-The local target is a parquet directory rewritten per batch (read ->
-merge -> atomic swap). On a real deployment the same ``merge_upsert``
-frame feeds a Delta ``MERGE WHEN MATCHED ... WHEN NOT MATCHED`` or a JDBC
-upsert — swap the sink, keep the semantics.
+The local target is a hash-partitioned parquet state whose live files a
+versioned manifest names: a batch reads the partitions it touches,
+merges and commits them as one new version. On a real deployment the
+same ``merge_upsert`` frame feeds a Delta ``MERGE WHEN MATCHED ... WHEN
+NOT MATCHED`` or a JDBC upsert — swap the sink, keep the semantics.
 """
 
 from __future__ import annotations
@@ -112,7 +113,7 @@ def split_transactions(
 
     Shuffles key on the transaction id only; the complete-id set is
     O(transactions in flight), so the semi/anti joins broadcast under
-    AQE. Applying ``ready`` through one merge + atomic swap gives
+    AQE. Applying ``ready`` through one merge + manifest commit gives
     all-or-nothing visibility per source transaction — the guarantee
     micro-batch atomicity alone cannot give when a batch boundary splits
     a transaction."""
@@ -357,90 +358,6 @@ def merge_upsert(
     return kept.unionByName(applied)
 
 
-class ParquetUpsertSink:
-    """foreachBatch sink applying merge_upsert into a parquet directory
-    with a crash-recoverable directory swap (local stand-in for Delta
-    MERGE; production scale path is Delta/Iceberg MERGE or the executed
-    DbApiUpsertSink — this sink rewrites O(table) per batch by design).
-
-    The swap is two renames (target -> __old, tmp -> target); a crash
-    between them would otherwise leave no target and the next merge
-    would silently treat the table as empty. ``read_target`` therefore
-    restores the newest ``__old_*`` generation whenever the target is
-    missing — combined with the LSN guard, the re-driven batch then
-    converges instead of losing state."""
-
-    def __init__(self, spark: SparkSession, target_dir: str, pk_cols: list[str],
-                 lsn_col: str = "lsn", dlq_dir: str | None = None):
-        self.spark = spark
-        self.target_dir = target_dir
-        self.pk_cols = pk_cols
-        self.lsn_col = lsn_col
-        self.dlq_dir = dlq_dir
-
-    def _generations(self, kind: str, path: str | None = None) -> list[str]:
-        import glob
-
-        return sorted(
-            glob.glob(f"{path or self.target_dir}__{kind}_*"),
-            key=os.path.getmtime,
-        )
-
-    def _recover(self) -> None:
-        """If a crash landed between the two swap renames, the newest
-        __old_* generation IS the pre-batch table — restore it."""
-        if os.path.exists(self.target_dir):
-            return
-        olds = self._generations("old")
-        if olds:
-            os.rename(olds[-1], self.target_dir)
-
-    def _swap_in(self, df: DataFrame, path: str) -> None:
-        """Write-to-tmp + rename swap + cleanup of superseded
-        generations (the target-apply discipline; the transactional
-        pending spool uses batch-id generations via _write_pending
-        instead — a replay must read the PREVIOUS generation, which a
-        swap-in-place cannot provide)."""
-        tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            os.rename(path, f"{path}__old_{uuid.uuid4().hex[:8]}")
-        os.rename(tmp, path)
-        for stale in self._generations("old", path) + self._generations("tmp", path):
-            shutil.rmtree(stale, ignore_errors=True)
-
-    def read_target(self) -> DataFrame | None:
-        self._recover()
-        if not os.path.exists(self.target_dir):
-            return None
-        return self.spark.read.parquet(self.target_dir)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from sqlserver_pg_cdc_spark.tracing import get_tracer
-
-        try:
-            with get_tracer().span(
-                "cdc_apply_batch", batch_id=batch_id, target=self.target_dir
-            ):
-                self._apply(batch_df, batch_id)
-        except Exception as e:  # St10: error routing, not query death
-            if self.dlq_dir is None:
-                raise
-            (
-                batch_df.withColumn("__error_class", F.lit(type(e).__name__))
-                .withColumn("__error_message", F.lit(str(e)[:2000]))
-                .withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(self.dlq_dir)
-            )
-
-    def _apply(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
-        merged = merge_upsert(
-            self.read_target(), batch_df, self.pk_cols, self.lsn_col
-        )
-        self._swap_in(merged, self.target_dir)
-
-
 LOG_DIR = "_log"
 _VERSION_RE = re.compile(r"\d{20}\.json")
 
@@ -499,19 +416,59 @@ def _union_schema(prev: dict | None, schema) -> dict:
 
 
 class HashPartitionedStateMixin:
-    """Hash-partitioned state shared by `PartitionedParquetUpsertSink`,
-    `scd2.PartitionedScd2Sink` and `rollup.PartitionedContinuousAggSink`:
-    ``n_partitions`` partitions keyed by ``pmod(xxhash64(*pk_cols), n)``,
-    whose live files an append-only manifest names (``_log/``, see
-    :func:`read_manifest`; Delta Lake's transaction log, Armbrust et al.,
-    VLDB 2020). Every batch and maintenance pass reads one snapshot and
-    commits one version through :meth:`_commit`, so a reader sees a
-    whole batch or none of it. Readers scan exactly the latest version's
-    directories and rename, sweep and delete nothing; whatever it does
-    not name is debris of a crashed attempt, removed by the next commit
-    (a writer under its beacon or a pass under the maintenance lock).
-    One writer per state. Expects ``spark``, ``target_dir``,
-    ``pk_cols``, ``lsn_col`` and ``n_partitions`` on self."""
+    """The one state store of every parquet sink (upsert, SCD2, rollup,
+    count-min sketch): ``n_partitions`` partitions keyed by
+    ``pmod(xxhash64(*pk_cols), n)``, whose live files an append-only
+    manifest names (``_log/``, see :func:`read_manifest`; Delta Lake's
+    transaction log, Armbrust et al., VLDB 2020). A flat sink is the
+    one-partition case (the class default); its ``Partitioned*`` twin
+    only sets the count. Every batch and maintenance pass reads one
+    snapshot and commits one version through :meth:`_commit`, so a
+    reader sees a whole batch or none of it. Readers scan exactly the
+    latest version's directories and rename, sweep and delete nothing;
+    whatever it does not name is debris of a crashed attempt, removed by
+    the next commit (a writer under its beacon or a pass under the
+    maintenance lock). One writer per state.
+
+    Calling the sink (``foreachBatch``) runs ``self._apply`` inside a
+    ``span_name`` span; a failure routes the batch to ``dlq_dir`` with
+    its error (St10: error routing, not query death), or raises when
+    there is no DLQ."""
+
+    n_partitions: int = 1
+    span_name: str = "state_batch"
+
+    def __init__(self, spark: SparkSession, target_dir: str, pk_cols: list[str],
+                 lsn_col: str = "lsn", dlq_dir: str | None = None):
+        self.spark = spark
+        self.target_dir = target_dir
+        self.pk_cols = pk_cols
+        self.lsn_col = lsn_col
+        self.dlq_dir = dlq_dir
+
+    def _set_partitions(self, n_partitions: int) -> None:
+        if n_partitions < 1:
+            raise ValueError("n_partitions must be >= 1")
+        self.n_partitions = n_partitions
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        from sqlserver_pg_cdc_spark.tracing import get_tracer
+
+        try:
+            with get_tracer().span(
+                self.span_name, batch_id=batch_id, target=self.target_dir
+            ):
+                self._apply(batch_df, batch_id)
+        except Exception as e:
+            if self.dlq_dir is None:
+                raise
+            (
+                batch_df.withColumn("__error_class", F.lit(type(e).__name__))
+                .withColumn("__error_message", F.lit(str(e)[:2000]))
+                .withColumn("__batch_id", F.lit(batch_id))
+                .write.mode("append")
+                .parquet(self.dlq_dir)
+            )
 
     @staticmethod
     def committed_partitions(state_dir: str) -> int | None:
@@ -552,8 +509,10 @@ class HashPartitionedStateMixin:
         ):
             raise ValueError(
                 f"state dir {root} holds a NON-partitioned table (loose "
-                "parquet files at the root); refusing to silently ignore "
-                "it — use the non-partitioned sink, or rebuild the state"
+                f"parquet files at the root, no {LOG_DIR}/ manifest) — "
+                "written before the manifest format or by something "
+                "else; refusing to silently ignore it — rebuild the "
+                "state by re-ingesting it"
             )
         if any(n.startswith("part_") for n in names):
             raise ValueError(
@@ -660,10 +619,9 @@ class HashPartitionedStateMixin:
         batch: DataFrame,
         batch_id: int | None,
         merge: Callable[[DataFrame | None, DataFrame], DataFrame],
-        what: str,
         skip_replay: bool = False,
     ) -> None:
-        """The one batch path of the partitioned sinks: route ``batch``
+        """The one batch path of every sink: route ``batch``
         by key hash (keys cast to the stored types), read only the
         touched partitions and commit ``merge(prev_slice, batch)`` as
         their content. With ``skip_replay`` a batch whose id is at or
@@ -673,7 +631,7 @@ class HashPartitionedStateMixin:
         collect, so the merge and write plan over a LogicalRDD."""
         from sqlserver_pg_cdc_spark.streaming.lock import writer_beacon
 
-        with writer_beacon(self.target_dir, what):
+        with writer_beacon(self.target_dir, self.span_name):
             snap = self._snapshot()
             done = None if snap is None else snap["batch_id"]
             if skip_replay and None not in (batch_id, done) and batch_id <= done:
@@ -898,44 +856,26 @@ class HashPartitionedStateMixin:
             self._commit(snap, st, None, n_partitions=n_new)
 
 
-class PartitionedParquetUpsertSink(HashPartitionedStateMixin, ParquetUpsertSink):
-    """CDC upsert sink with HASH-PARTITIONED state: the 100 TB shape of
-    the local parquet target.
-
-    ``ParquetUpsertSink`` reads, merges, and swaps the WHOLE table every
-    micro-batch — O(table) per batch, the documented local stand-in for
-    Delta/Iceberg MERGE. Here the table lives in ``n_partitions``
-    hash partitions (``HashPartitionedStateMixin``); a batch
+class ParquetUpsertSink(HashPartitionedStateMixin):
+    """foreachBatch sink applying the LSN-guarded ``merge_upsert`` into
+    the parquet state store (the local stand-in for Delta MERGE;
+    production scale paths are Delta/Iceberg MERGE or the executed
+    DbApiUpsertSink). A batch
 
     1. dedupes to the latest LSN per key (batch-sized, once),
     2. collects the distinct partition ids it touches (bounded by
        ``n_partitions``, never by data),
     3. reads ONLY the touched partitions of the committed snapshot,
-    4. runs the same LSN-guarded ``merge_upsert`` against that slice and
-       commits the rewritten partitions as one new manifest version.
+    4. runs ``merge_upsert`` against that slice and commits the
+       rewritten partitions as one new manifest version.
 
-    Untouched partitions are never opened — per-batch work is O(batch +
-    touched partitions), the partition-pruned discipline a clustered
-    Delta MERGE gives (reference analog: JDBC sink upsert batches,
-    docker/configs/kafka-connect/postgresql-sink.json:23-34). A reader
-    sees the whole batch or none of it. The manifest records the batch
-    id, but replay is not skipped on it: the LSN guard makes a
-    re-driven batch converge, whether its first attempt crashed before
-    the commit or after it."""
+    This flat sink keeps the whole table in one partition, so a batch
+    rewrites O(table). A reader sees the whole batch or none of it. The
+    manifest records the batch id, but replay is not skipped on it: the
+    LSN guard makes a re-driven batch converge, whether its first
+    attempt crashed before the commit or after it."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        target_dir: str,
-        pk_cols: list[str],
-        lsn_col: str = "lsn",
-        dlq_dir: str | None = None,
-        n_partitions: int = 32,
-    ):
-        super().__init__(spark, target_dir, pk_cols, lsn_col, dlq_dir)
-        if n_partitions < 1:
-            raise ValueError("n_partitions must be >= 1")
-        self.n_partitions = n_partitions
+    span_name = "cdc_apply_batch"
 
     # Subclasses whose batches are one-row-per-key BY CONSTRUCTION
     # (e.g. DiversitySampleSink's fold output) set this True to skip
@@ -956,17 +896,37 @@ class PartitionedParquetUpsertSink(HashPartitionedStateMixin, ParquetUpsertSink)
             lambda prev, changes: merge_upsert(
                 prev, changes, self.pk_cols, self.lsn_col, assume_deduped=True
             ),
-            "partitioned upsert batch",
         )
+
+
+class PartitionedParquetUpsertSink(ParquetUpsertSink):
+    """``ParquetUpsertSink`` over ``n_partitions`` hash partitions: the
+    100 TB shape of the local parquet target. Untouched partitions are
+    never opened — per-batch work is O(batch + touched partitions), the
+    partition-pruned discipline a clustered Delta MERGE gives (reference
+    analog: JDBC sink upsert batches,
+    docker/configs/kafka-connect/postgresql-sink.json:23-34)."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        target_dir: str,
+        pk_cols: list[str],
+        lsn_col: str = "lsn",
+        dlq_dir: str | None = None,
+        n_partitions: int = 32,
+    ):
+        super().__init__(spark, target_dir, pk_cols, lsn_col, dlq_dir)
+        self._set_partitions(n_partitions)
 
 
 class TransactionalParquetUpsertSink(ParquetUpsertSink):
     """St8 sink: ParquetUpsertSink plus source-transaction atomicity.
 
     Rows whose source transaction is incomplete at batch end are carried
-    over in a pending spool (parquet, same swap discipline) and
-    re-presented to :func:`split_transactions` with every later batch;
-    complete transactions apply through ONE merge + directory swap, so a
+    over in a pending spool (parquet) and re-presented to
+    :func:`split_transactions` with every later batch; complete
+    transactions apply through ONE merge and manifest commit, so a
     reader never observes half a source transaction even when the
     micro-batch boundary split it (the gap micro-batch atomicity alone
     leaves open). Reference: provide.transaction.metadata=true

@@ -42,7 +42,7 @@ Crash recovery, without TOCTOU races:
   fresh lock that replaced it in the meantime is never deleted.
 
 Breaking a stale lock is safe because every guarded op is individually
-crash-recoverable (the partitioned state's manifest commit, the
+crash-recoverable (the state store's manifest commit, the
 batch-log meta commit point): the lock exists to serialize LIVE
 writers, not to mark corruption.
 

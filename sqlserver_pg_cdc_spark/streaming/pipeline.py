@@ -85,7 +85,7 @@ class CdcPipeline:
         # transactions all-or-nothing (TransactionalParquetUpsertSink)
         self.transactional = transactional
         # custom foreachBatch sink (e.g. jdbc.DbApiUpsertSink against a
-        # live database); defaults to the parquet swap sink
+        # live database); defaults to the flat parquet upsert sink
         self.sink = sink
 
     def _default_sink(self):
@@ -144,7 +144,7 @@ class CdcPipeline:
 
     def target(self) -> DataFrame | None:
         # a custom sink (partitioned layout, DBAPI target) knows how to
-        # read its own state; fall back to the plain parquet layout
+        # read its own state; fall back to the flat parquet state
         if self.sink is not None and hasattr(self.sink, "read_target"):
             return self.sink.read_target()
         sink = ParquetUpsertSink(self.spark, self.target_dir, self.pk_cols)

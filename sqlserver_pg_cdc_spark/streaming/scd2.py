@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sqlserver_pg_cdc_spark.streaming.apply import HashPartitionedStateMixin
+
 OPEN_LSN = (1 << 62)  # sentinel for "still active"; larger than any real LSN
 
 
@@ -161,16 +163,28 @@ def as_of_lsn(history: DataFrame, lsn: int) -> DataFrame:
     ).drop(*drop)
 
 
-class Scd2ParquetSink:
-    """foreachBatch sink maintaining an SCD2 history table in parquet —
-    the versioned-history alternative to ParquetUpsertSink, sharing its
-    crash-recoverable generation-swap discipline (composition, not
-    inheritance: the apply step rewrites version chains, not rows).
+class Scd2ParquetSink(HashPartitionedStateMixin):
+    """foreachBatch sink maintaining an SCD2 history table in the parquet
+    state store of `streaming/apply.py` — the versioned-history
+    alternative to ParquetUpsertSink, committing through the same
+    manifest (``HashPartitionedStateMixin``; the SCD2 apply replaces the
+    upsert merge). This flat sink keeps the history in one partition, so
+    a batch rewrites O(history); :class:`PartitionedScd2Sink` spreads it
+    over hash partitions.
 
     The batch frame must carry the business columns + (lsn, op) the
-    unwrap stage produces. Replays are idempotent by (key, LSN), so
-    checkpoint re-delivery converges.
+    unwrap stage produces. A batch routes its rows by PK hash, reads the
+    partitions it touches, runs :func:`scd2_apply` against that slice —
+    the apply step confines version-chain surgery to the batch's keys,
+    and every key in the slice hashes back into a touched partition —
+    and commits them as one new manifest version, so a reader sees the
+    whole batch or none of it. The manifest records the batch id, but
+    replay is not skipped on it: ``scd2_apply`` drops batch versions
+    whose (key, LSN) the history already holds, so a batch re-driven
+    after a crash on either side of the commit converges.
     """
+
+    span_name = "scd2_apply_batch"
 
     def __init__(
         self,
@@ -180,95 +194,11 @@ class Scd2ParquetSink:
         lsn_col: str = "lsn",
         op_col: str = "op",
     ):
-        from sqlserver_pg_cdc_spark.streaming.apply import ParquetUpsertSink
-
-        # reuse the swap/recover machinery via a private upsert sink
-        self._store = ParquetUpsertSink(spark, history_dir, pk_cols)
-        self.pk_cols = pk_cols
-        self.lsn_col = lsn_col
+        super().__init__(spark, history_dir, pk_cols, lsn_col)
         self.op_col = op_col
-
-    def history(self):
-        return self._store.read_target()
-
-    def __call__(self, batch_df, batch_id: int) -> None:
-        from sqlserver_pg_cdc_spark.tracing import get_tracer
-
-        with get_tracer().span("scd2_apply_batch", batch_id=batch_id):
-            new_hist = scd2_apply(
-                self.history(), batch_df, self.pk_cols,
-                lsn_col=self.lsn_col, op_col=self.op_col,
-            )
-            self._store._swap_in(new_hist, self._store.target_dir)
-
-    def current(self):
-        h = self.history()
-        return None if h is None else current_view(h)
-
-
-class PartitionedScd2Sink:
-    """SCD2 history sink with HASH-PARTITIONED state — the 100 TB shape
-    of the versioned-history target.
-
-    ``Scd2ParquetSink`` reads and swaps the ENTIRE history every
-    micro-batch: O(history) per batch against a table that grows without
-    bound. Here the history lives in ``n_partitions`` hash partitions
-    (the ``HashPartitionedStateMixin`` store the upsert and rollup sinks
-    share); a batch
-
-    1. routes its rows by PK hash and collects the distinct partition
-       ids it touches (bounded by ``n_partitions``, never by data),
-    2. reads ONLY the touched partitions of the committed history,
-    3. runs :func:`scd2_apply` against that slice — the apply step
-       already confines version-chain surgery to the batch's keys, and
-       every key in the slice hashes back into a touched partition —
-    4. commits the rewritten partitions as one new manifest version.
-
-    Per-batch work is O(batch + touched partitions), not O(history),
-    and a reader sees the whole batch or none of it. The manifest
-    records the batch id, but replay is not skipped on it:
-    ``scd2_apply`` drops batch versions whose (key, LSN) the history
-    already holds, so a batch re-driven after a crash on either side of
-    the commit converges. Reference analog: incremental reconciliation
-    state applied per change batch,
-    src/reconciliation/incremental/state.py:112-164.
-    """
-
-    def __init__(
-        self,
-        spark,
-        history_dir: str,
-        pk_cols: list[str],
-        lsn_col: str = "lsn",
-        op_col: str = "op",
-        dlq_dir: str | None = None,
-        n_partitions: int = 32,
-    ):
-        from sqlserver_pg_cdc_spark.streaming.apply import (
-            HashPartitionedStateMixin,
-            ParquetUpsertSink,
-        )
-
-        # composition over a private partitioned store: the mixin
-        # contributes the manifest, the guards and the batch path; the
-        # SCD2 apply replaces the upsert merge entirely.
-        class _Store(HashPartitionedStateMixin, ParquetUpsertSink):
-            pass
-
-        if n_partitions < 1:
-            raise ValueError("n_partitions must be >= 1")
-        self._store = _Store(spark, history_dir, pk_cols, lsn_col, dlq_dir)
-        self._store.n_partitions = n_partitions
-        self.spark = spark
-        self.pk_cols = pk_cols
-        self.lsn_col = lsn_col
-        self.op_col = op_col
-        self.dlq_dir = dlq_dir
-        self.n_partitions = n_partitions
-        self.target_dir = history_dir
 
     def history(self) -> DataFrame | None:
-        return self._store.read_target()
+        return self.read_target()
 
     def current(self) -> DataFrame | None:
         h = self.history()
@@ -282,37 +212,15 @@ class PartitionedScd2Sink:
         """Point lookup into the versioned history: opens only the
         partition directories the keys hash to (a key's full audit trail
         lives in one partition by construction)."""
-        return self._store.read_keys(key_rows)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from sqlserver_pg_cdc_spark.tracing import get_tracer
-
-        try:
-            with get_tracer().span(
-                "scd2_apply_batch_partitioned",
-                batch_id=batch_id,
-                target=self.target_dir,
-            ):
-                self._apply(batch_df, batch_id)
-        except Exception as e:
-            if self.dlq_dir is None:
-                raise
-            (
-                batch_df.withColumn("__error_class", F.lit(type(e).__name__))
-                .withColumn("__error_message", F.lit(str(e)[:2000]))
-                .withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(self.dlq_dir)
-            )
+        return self.read_keys(key_rows)
 
     def _apply(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
-        self._store._merge_batch(
+        self._merge_batch(
             batch_df,
             batch_id,
             lambda prev, batch: scd2_apply(
                 prev, batch, self.pk_cols, lsn_col=self.lsn_col, op_col=self.op_col
             ),
-            "SCD2 apply batch",
         )
 
     # -- day-2 maintenance ---------------------------------------------------
@@ -342,15 +250,30 @@ class PartitionedScd2Sink:
 
         wm = F.lit(int(watermark_lsn))
         with maintenance_lock(self.target_dir, "prune_history"):
-            pruned, k = self._store._drop_rows(
+            pruned, k = self._drop_rows(
                 lambda h: F.coalesce(F.col("__valid_to_lsn") <= wm, F.lit(False))
             )
         return {"pruned": pruned, "partitions_rewritten": k}
 
-    def rescale(self, n_new: int) -> None:
-        """Re-hash the history into ``n_new`` partitions (the
-        HashPartitionedStateMixin maintenance op — a key's full version
-        chain moves as a unit because every version hashes on the same
-        PK). Run on a quiesced stream."""
-        self._store.rescale(n_new)
-        self.n_partitions = n_new
+
+class PartitionedScd2Sink(Scd2ParquetSink):
+    """``Scd2ParquetSink`` over ``n_partitions`` hash partitions — the
+    100 TB shape of the versioned-history target, whose history grows
+    without bound. Per-batch work is O(batch + touched partitions), not
+    O(history). Reference analog: incremental reconciliation state
+    applied per change batch, src/reconciliation/incremental/state.py:112-164.
+    """
+
+    def __init__(
+        self,
+        spark,
+        history_dir: str,
+        pk_cols: list[str],
+        lsn_col: str = "lsn",
+        op_col: str = "op",
+        dlq_dir: str | None = None,
+        n_partitions: int = 32,
+    ):
+        super().__init__(spark, history_dir, pk_cols, lsn_col, op_col)
+        self.dlq_dir = dlq_dir
+        self._set_partitions(n_partitions)

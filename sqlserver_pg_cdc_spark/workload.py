@@ -1364,7 +1364,7 @@ def q_scd2_time_travel_partitioned(spark: SparkSession, sf_dir: str) -> DataFram
     (`streaming/scd2.PartitionedScd2Sink`) — the 100 TB shape of the
     versioned target, previously pytest/bench-verified only: the event
     change stream applies in two batches through the O(batch + touched
-    partitions) sink (state on disk, per-partition swaps, cross-batch
+    partitions) sink (state on disk, one manifest commit per batch, cross-batch
     validity-chain closure over partition-pruned reads), then
     ``as_of(mid)`` reconstructs the table at the stream's midpoint LSN
     from the partitioned state. The oracle is the same relational

@@ -95,18 +95,18 @@ def test_rollup_sink_idempotent_replay(spark, frame, tmp_path):
     assert got == want
 
 
-def test_rollup_sink_crash_recovery(spark, frame, tmp_path):
-    """Simulate a crash between the two swap renames: the state dir is
-    gone but an __old_ generation exists — the next batch must recover
-    it rather than restart from empty."""
-    import os
-
+def test_rollup_sink_crash_recovery(spark, frame, tmp_path, at_commit_step):
+    """Simulate a crash inside the commit of a batch: its new generation
+    landed but no version names it — the re-driven batch must merge into
+    the prior state rather than restart from empty or double count."""
     from sqlserver_pg_cdc_spark.streaming.rollup import ContinuousAggSink
 
     state = str(tmp_path / "state")
     sink = ContinuousAggSink(spark, state, KEYS, "value")
     sink(frame.filter("value < 0"), 0)
-    os.rename(state, f"{state}__old_deadbeef")  # crash window
+    at_commit_step("after_renames")  # crash window
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sink(frame.filter("value >= 0"), 1)
     sink(frame.filter("value >= 0"), 1)
     got = _final(sink.result())
     want = _final(CA.finalize(CA.build_state(frame, KEYS, "value"), KEYS))
@@ -301,13 +301,10 @@ def test_partitioned_sink_end_to_end_writestream(spark, tmp_path):
 def test_partitioned_sink_rejects_loose_state_dir(spark, frame, tmp_path):
     """Pointing the partitioned sink at an existing NON-partitioned
     state dir must fail fast, not silently ignore the prior state."""
-    from sqlserver_pg_cdc_spark.streaming.rollup import (
-        ContinuousAggSink,
-        PartitionedContinuousAggSink,
-    )
+    from sqlserver_pg_cdc_spark.streaming.rollup import PartitionedContinuousAggSink
 
     state = str(tmp_path / "state")
-    ContinuousAggSink(spark, state, KEYS, "value")(frame.filter("value < 0"), 0)
+    CA.build_state(frame.filter("value < 0"), KEYS, "value").write.parquet(state)
     part = PartitionedContinuousAggSink(spark, state, KEYS, "value", n_partitions=8)
     with pytest.raises(ValueError, match="NON-partitioned"):
         part(frame.filter("value >= 0"), 1)
@@ -359,3 +356,23 @@ def test_partitioned_sink_sweeps_orphan_batchtmp(spark, frame, tmp_path):
     got = _final(sink.result())
     want = _final(CA.finalize(CA.build_state(frame, KEYS, "value"), KEYS))
     assert got == want
+
+
+def test_rollup_cli_refuses_idempotent_without_batch_id(monkeypatch, tmp_path):
+    """``rollup --idempotent`` without ``--batch-id`` would give every
+    refresh the same id, so each one after the first is skipped as a
+    replay and the stale group count printed. The flag combination is
+    refused before Spark starts, naming ``--batch-id``."""
+    from sqlserver_pg_cdc_spark import cli, session
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark was started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(SystemExit, match="--batch-id"):
+        cli.main([
+            "rollup", "--input", str(tmp_path / "delta"),
+            "--state-dir", str(tmp_path / "state"),
+            "--key-columns", "k", "--value-col", "value", "--idempotent",
+        ])
+    assert not (tmp_path / "state").exists()

@@ -141,7 +141,7 @@ def test_full_chain_demux_and_replay_idempotency(spark, tmp_path):
     sink(batch, batch_id=0)
 
     def state(table):
-        df = spark.read.parquet(str(tmp_path / "targets" / table))
+        df = sink.sink_for(table).read_target()
         return {
             r["id"]: (r["name"], r["amount"], r["__deleted"]) for r in df.collect()
         }
@@ -182,7 +182,7 @@ def test_demux_unknown_table_routes_to_dlq(spark, tmp_path):
         "id long, name string, lsn long, ts_ms long, __deleted string, __table string",
     )
     sink(df, batch_id=3)
-    applied = spark.read.parquet(str(tmp_path / "targets" / "orders"))
+    applied = sink.sink_for("orders").read_target()
     assert [r["id"] for r in applied.collect()] == [1]
     quarantined = spark.read.parquet(f"{dlq}/__unrouted_mystery").collect()
     assert len(quarantined) == 1

@@ -217,7 +217,7 @@ def test_dlq_routing_on_sink_failure(spark, tmp_path):
     from sqlserver_pg_cdc_spark.streaming.apply import ParquetUpsertSink
 
     class FailingSink(ParquetUpsertSink):
-        def read_target(self):
+        def _snapshot(self):
             raise RuntimeError("simulated target corruption")
 
     dlq = str(tmp_path / "dlq")
@@ -240,7 +240,7 @@ def test_sink_without_dlq_raises(spark, tmp_path):
     from sqlserver_pg_cdc_spark.streaming.apply import ParquetUpsertSink
 
     class FailingSink(ParquetUpsertSink):
-        def read_target(self):
+        def _snapshot(self):
             raise RuntimeError("boom")
 
     sink = FailingSink(spark, str(tmp_path / "tgt"), ["id"])  # no dlq_dir
@@ -251,10 +251,11 @@ def test_sink_without_dlq_raises(spark, tmp_path):
         sink(batch, batch_id=0)
 
 
-def test_crash_between_swap_renames_recovers(spark, tmp_path):
-    """A crash after target->__old but before tmp->target must NOT lose
-    the applied state: read_target restores the newest __old_* dir and
-    the re-driven batch converges (ADVICE r1: silent-empty-table bug)."""
+def test_crash_between_swap_renames_recovers(spark, tmp_path, at_commit_step):
+    """A crash after the batch's new generation landed but before the
+    version that names it was committed must NOT lose the applied
+    state: read_target still serves the previous version and the
+    re-driven batch converges (ADVICE r1: silent-empty-table bug)."""
     import os
 
     from sqlserver_pg_cdc_spark.streaming.apply import ParquetUpsertSink
@@ -266,24 +267,71 @@ def test_crash_between_swap_renames_recovers(spark, tmp_path):
     )
     sink(b0, 0)
 
-    # simulate the torn swap: target renamed away, replacement never landed
-    os.rename(tgt, tgt + "__old_deadbeef")
-    assert not os.path.exists(tgt)
+    # the torn commit: new generation renamed in, no version linked
+    b1 = spark.createDataFrame(
+        [(1, "a", 1), (3, "c", 3)], "id long, v string, lsn long"
+    )
+    at_commit_step("after_renames")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sink(b1, 1)
 
-    # recovery happens on the next read; prior state intact
+    # a reader sees the prior state intact
     recovered = {r["id"]: r["v"] for r in sink.read_target().collect()}
     assert recovered == {1: "a", 2: "b"}
 
     # re-driven batch (checkpoint replay) + a new change both apply
-    b1 = spark.createDataFrame(
-        [(1, "a", 1), (3, "c", 3)], "id long, v string, lsn long"
-    )
     sink(b1, 1)
     final = {r["id"]: r["v"] for r in sink.read_target().collect()}
     assert final == {1: "a", 2: "b", 3: "c"}
-    # superseded generations cleaned up on success
-    leftovers = [p for p in os.listdir(tmp_path) if "__old_" in p or "__tmp_" in p]
+    # the crashed attempt's generation and batch temp cleaned up on success
+    live = set(sink._snapshot()["parts"].values())
+    leftovers = [p for p in os.listdir(tmp_path) if "__old_" in p or "__tmp_" in p] + [
+        p
+        for p in os.listdir(tgt)
+        if p.startswith("__batchtmp_") or (p.startswith("part_") and p not in live)
+    ]
     assert leftovers == []
+
+
+def test_flat_upsert_reader_mid_batch_never_breaks_the_writer(
+    spark, tmp_path, monkeypatch
+):
+    """Regression: a second handle's read_target() landing at the flat
+    sink's first rename of a batch must neither fail the writer nor
+    lose the batch. A reader that "recovered" a half-swapped directory
+    by renaming it back made the writer's next rename fail (ENOTEMPTY):
+    with no DLQ the batch killed the query, none of it applied and its
+    temp directory stayed behind."""
+    from sqlserver_pg_cdc_spark.streaming.apply import ParquetUpsertSink
+
+    d = str(tmp_path / "tgt")
+    sink = ParquetUpsertSink(spark, d, ["id"])  # no dlq_dir
+    sink(_rows(spark, [(i, f"n{i}", float(i), 10 + i) for i in range(20)]), 0)
+    want_pre = _as_map(sink.read_target())
+    reader = ParquetUpsertSink(spark, d, ["id"])
+    fired, seen = [], []
+    rename = os.rename
+
+    def _rename(src, dst, *a, **k):
+        out = rename(src, dst, *a, **k)
+        if not fired:
+            fired.append(src)
+            seen.append(_as_map(reader.read_target()))
+        return out
+
+    monkeypatch.setattr(os, "rename", _rename)
+    sink(_rows(spark, [(i, f"u{i}", -1.0, 500 + i) for i in range(20)]), 1)
+    monkeypatch.undo()
+    assert seen == [want_pre]
+    got = _as_map(sink.read_target())
+    updated = [i for i in range(20) if got[i] == (f"u{i}", -1.0, 500 + i)]
+    assert len(updated) == 20
+    debris = [
+        n
+        for n in os.listdir(tmp_path) + os.listdir(d)
+        if "__tmp_" in n or n.startswith("__batchtmp_")
+    ]
+    assert debris == []
 
 
 def test_snapshot_bootstrap_then_stream_catchup(spark, tmp_path):
@@ -547,10 +595,12 @@ def test_partitioned_upsert_layout_guards(spark, tmp_path):
 
     b = _rows(spark, [(1, "a", 1.0, 1)])
     flat_dir = str(tmp_path / "flat")
-    ParquetUpsertSink(spark, flat_dir, ["id"])(b, 0)
+    b.write.parquet(flat_dir)
     bad = PartitionedParquetUpsertSink(spark, flat_dir, ["id"], n_partitions=8)
     with pytest.raises(ValueError, match="NON-partitioned"):
         bad(b, 1)
+    with pytest.raises(ValueError, match="NON-partitioned"):
+        ParquetUpsertSink(spark, flat_dir, ["id"]).read_target()
     part = _part_sink(spark, tmp_path, n=8)
     part(b, 0)
     wrong = PartitionedParquetUpsertSink(
