@@ -7,23 +7,25 @@ batch 3000 (docker/configs/kafka-connect/postgresql-sink.json:23-58).
 Here the whole chain is a handful of DataFrame transforms plus an
 idempotent keyed upsert inside ``foreachBatch``:
 
-- within-batch dedup to the latest LSN per key (row_number window) — the
-  correctness keystone for at-least-once delivery (FR-005);
-- cross-batch idempotence via an LSN guard: an incoming change only
-  replaces the stored row when its LSN is >= the stored LSN, so replays
-  after checkpoint recovery are no-ops;
+- one window over stored ∪ batch keeps the latest LSN per key: it is
+  both the within-batch dedup — the correctness keystone for
+  at-least-once delivery (FR-005) — and the cross-batch LSN guard: an
+  incoming change only replaces the stored row when its LSN is >= the
+  stored LSN, so replays after checkpoint recovery are no-ops;
 - deletes are soft (rewrite mode): the row survives with
   ``__deleted='true'``.
 
 The local target is a hash-partitioned parquet state whose live files a
 versioned manifest names: a batch reads the partitions it touches,
-merges and commits them as one new version. On a real deployment the
+merges them in one window on the shuffle its write reuses, and commits
+them as one new version. On a real deployment the
 same ``merge_upsert`` frame feeds a Delta ``MERGE WHEN MATCHED ... WHEN
 NOT MATCHED`` or a JDBC upsert — swap the sink, keep the semantics.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -216,7 +218,9 @@ def latest_per_key(
     lsn_col: str = "lsn",
     salt_partitions: int | None = None,
 ) -> DataFrame:
-    """St5 within-batch dedup: keep only the highest-LSN change per key.
+    """St5 within-batch dedup: keep only the highest-LSN change per key
+    (the JDBC upsert sink's reduction; the parquet sinks'
+    :func:`merge_upsert` does it inside its one window).
 
     Default: row_number window (one shuffle on the PK). With
     ``salt_partitions`` the reduction runs two-phase for HOT keys — a
@@ -264,8 +268,6 @@ def align_evolved_sides(
       the DLQ, matching the reference's contract
       (tests/integration/test_schema_evolution.py:187,235).
     """
-    from pyspark.sql import types as T
-
     from sqlserver_pg_cdc_spark.operators.evolution import (
         align_to_evolved,
         diff_schemas,
@@ -291,7 +293,7 @@ def merge_upsert(
     changes: DataFrame,
     pk_cols: list[str],
     lsn_col: str = "lsn",
-    assume_deduped: bool = False,
+    partition: tuple[str, int] | None = None,
 ) -> DataFrame:
     """Keyed upsert with LSN guard (idempotent replay).
 
@@ -300,62 +302,45 @@ def merge_upsert(
         MERGE INTO t USING c ON <pk> AND c.lsn >= t.lsn
         WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
 
-    Expressed relationally: keep target rows whose key is absent from the
-    batch OR whose stored LSN is newer; add all batch rows not superseded
-    by a newer stored row. One shuffle on the PK.
+    Expressed relationally: one window over the stored rows (tag 0) and
+    the batch (tag 1), ``row_number() OVER (PARTITION BY pk ORDER BY lsn
+    DESC NULLS LAST, tag DESC) = 1`` — the within-batch dedupe and the
+    cross-batch guard at once: a batch row wins at an LSN >= the stored
+    one (an equal LSN is a replay), and a NULL LSN loses to any LSN.
+    The window's exchange is the only shuffle.
 
-    ``assume_deduped=True`` skips the within-batch latest-per-key pass —
-    for callers that already reduced the batch (the partitioned sink
-    dedupes ONCE before routing rows to partitions).
+    ``partition=(col, k)``: both sides carry ``col``, a function of the
+    key (the partitioned sink's ``__p``); the union is shuffled on it
+    into ``k`` tasks and the window partitions by ``(col, *pk)`` — the
+    same groups — so a write that repartitions the result by ``col``
+    into ``k`` tasks reuses this exchange.
 
     Additive schema drift between the stored state and the batch is
     EVOLVED in place (:func:`align_evolved_sides` — the reference's
     ``auto.evolve``); a type change raises and the sink DLQs the batch.
 
-    Key matching is NULL-SAFE (``eqNullSafe``), consistent with
-    ``latest_per_key`` (whose window partitioning groups NULLs), the
-    partitioned layout's ``read_keys``, and the SCD2 apply: real SQL
-    primary keys are NOT NULL, but replication keys configured over
-    arbitrary columns can carry NULLs, and a null-unsafe join would
-    silently duplicate such a row on every batch instead of upserting
-    it. Null-safe equality is still a hash-joinable key, so the plan
-    stays one PK shuffle."""
-    deduped = changes if assume_deduped else latest_per_key(changes, pk_cols, lsn_col)
-    if target is None:
-        return deduped
-    target, deduped = align_evolved_sides(target, deduped)
-
-    def _ns_left(left: DataFrame, right: DataFrame) -> DataFrame:
-        # the probe side's key columns are renamed to __k_* BEFORE the
-        # join: both sides often share lineage (merge chains, self-
-        # derived batches), where attribute references turn ambiguous —
-        # with disjoint names, plain F.col resolves unambiguously and
-        # the null-safe condition stays a hash-joinable equi-key
-        renamed = right.select(
-            *[F.col(c).alias(f"__k_{c}") for c in pk_cols],
-            *[c for c in right.columns if c not in pk_cols],
-        )
-        cond = None
-        for c in pk_cols:
-            term = F.col(c).eqNullSafe(F.col(f"__k_{c}"))
-            cond = term if cond is None else (cond & term)
-        return left.join(renamed, cond, "left").drop(
-            *[f"__k_{c}" for c in pk_cols]
-        )
-
-    stale_keys = deduped.select(*pk_cols, F.col(lsn_col).alias("__new_lsn"))
-    kept = (
-        _ns_left(target, stale_keys)
-        .filter(F.col("__new_lsn").isNull() | (F.col(lsn_col) > F.col("__new_lsn")))
-        .drop("__new_lsn")
+    Key grouping is NULL-SAFE (a window partitions NULLs together),
+    consistent with ``latest_per_key``, the partitioned layout's
+    ``read_keys`` and the SCD2 apply: real SQL primary keys are NOT
+    NULL, but replication keys configured over arbitrary columns can
+    carry NULLs, and a NULL key must upsert rather than duplicate."""
+    if target is not None:
+        target, changes = align_evolved_sides(target, changes)
+    both = changes.withColumn("__tag", F.lit(1))
+    if target is not None:
+        both = target.withColumn("__tag", F.lit(0)).unionByName(both)
+    keys = list(pk_cols)
+    if partition is not None:
+        col, k = partition
+        both, keys = both.repartition(k, col), [col, *keys]
+    w = Window.partitionBy(*keys).orderBy(
+        F.col(lsn_col).desc_nulls_last(), F.col("__tag").desc()
     )
-    newer_target = target.select(*pk_cols, F.col(lsn_col).alias("__old_lsn"))
-    applied = (
-        _ns_left(deduped, newer_target)
-        .filter(F.col("__old_lsn").isNull() | (F.col(lsn_col) >= F.col("__old_lsn")))
-        .drop("__old_lsn")
+    return (
+        both.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__tag")
     )
-    return kept.unionByName(applied)
 
 
 LOG_DIR = "_log"
@@ -531,16 +516,18 @@ class HashPartitionedStateMixin:
         touched: list[int] | None,
         batch_id: int | None = None,
         n_partitions: int | None = None,
-    ) -> None:
+    ) -> dict:
         """Commit one version over ``snap``. ``frame`` (with the ``__p``
         column) holds the new rows of the ``touched`` partitions (None:
         all, as in a rescale); a touched partition with no rows leaves
-        the manifest.
+        the manifest. Returns the ``version`` and ``files_written``.
 
-        1. One ``partitionBy("__p")`` job writes ``__batchtmp_<token>``,
-           shuffled on ``__p`` first so each partition gets one file
-           (else every task fans out into every partition: 4x wall on a
-           100k-row batch over 32 partitions).
+        1. One ``partitionBy("__p")`` job writes ``__batchtmp_<token>``
+           from a shuffle on ``__p`` into :meth:`_write_tasks` tasks,
+           each file in LSN order. A ``__p`` hashes to one task, so a
+           partition gets one file, and no task waits for a second wave
+           of cores. Over a frame a merge already shuffled this way,
+           Spark plans no second exchange.
         2. Each ``__p=N`` is renamed to a new generation directory.
         3. Version v+1 is created put-if-absent (tmp file, ``os.link``):
            the commit point; a second commit of v+1 fails.
@@ -558,10 +545,14 @@ class HashPartitionedStateMixin:
         token = uuid.uuid4().hex[:8]
         log = os.path.join(self.target_dir, LOG_DIR)
         os.makedirs(log, exist_ok=True)
+        files = 0
         if frame is not None:
             tmp = os.path.join(self.target_dir, f"__batchtmp_{token}")
+            k = self._write_tasks(n if touched is None else len(touched))
+            order = [c for c in (self.lsn_col,) if c in frame.columns]
             (
-                frame.repartition(n if touched is None else len(touched), "__p")
+                frame.repartition(k, "__p")
+                .sortWithinPartitions("__p", *order)
                 .write.mode("overwrite")
                 .partitionBy("__p")
                 .parquet(tmp)
@@ -570,7 +561,9 @@ class HashPartitionedStateMixin:
             for d in sorted(os.listdir(tmp)):
                 if d.startswith("__p="):
                     gen = f"part_{int(d[4:]):05d}.v{version}-{token}"
-                    os.rename(os.path.join(tmp, d), os.path.join(self.target_dir, gen))
+                    src = os.path.join(tmp, d)
+                    files += sum(f.endswith(".parquet") for f in os.listdir(src))
+                    os.rename(src, os.path.join(self.target_dir, gen))
                     parts[d[4:]] = gen
         bids = [b for b in (batch_id, snap and snap["batch_id"]) if b is not None]
         body = {
@@ -596,6 +589,12 @@ class HashPartitionedStateMixin:
             os.remove(f"{final}.tmp_{token}")
         self.n_partitions = n
         self._gc(body)
+        return {"version": version, "files_written": files}
+
+    def _write_tasks(self, n_parts: int) -> int:
+        """Tasks of a commit's write over ``n_parts`` partitions: one
+        per partition, at most one per core."""
+        return min(n_parts, self.spark.sparkContext.defaultParallelism)
 
     def _gc(self, body: dict) -> None:
         """Step 4 of :meth:`_commit`. Two log entries stay, so a reader
@@ -618,18 +617,24 @@ class HashPartitionedStateMixin:
         self,
         batch: DataFrame,
         batch_id: int | None,
-        merge: Callable[[DataFrame | None, DataFrame], DataFrame],
+        merge: Callable[[DataFrame | None, DataFrame, int], DataFrame],
         skip_replay: bool = False,
     ) -> None:
-        """The one batch path of every sink: route ``batch``
-        by key hash (keys cast to the stored types), read only the
-        touched partitions and commit ``merge(prev_slice, batch)`` as
-        their content. With ``skip_replay`` a batch whose id is at or
-        below the committed ``batch_id`` is skipped whole. The writer
-        beacon excludes maintenance passes for the whole batch. The
-        LAZY ``localCheckpoint`` materializes in the touched-partition
-        collect, so the merge and write plan over a LogicalRDD."""
+        """The one batch path of every sink: route ``batch`` by key hash
+        (keys cast to the stored types) into ``__p``, read only the
+        touched partitions and commit ``merge(prev_slice, batch, k)`` as
+        their content. Both inputs and the result carry ``__p``; a merge
+        that shuffles on it into the commit's ``k`` write tasks (the
+        upsert's window) shares the commit's exchange. With
+        ``skip_replay`` a batch whose id is at or below the committed
+        ``batch_id`` is skipped whole. The writer beacon excludes
+        maintenance passes for the whole batch. The LAZY
+        ``localCheckpoint`` materializes in the touched-partition
+        collect, so the merge and write plan over a LogicalRDD. The
+        current span (the sink's) gets ``partitions_touched``,
+        ``version`` and ``files_written``."""
         from sqlserver_pg_cdc_spark.streaming.lock import writer_beacon
+        from sqlserver_pg_cdc_spark.tracing import current_span
 
         with writer_beacon(self.target_dir, self.span_name):
             snap = self._snapshot()
@@ -637,19 +642,24 @@ class HashPartitionedStateMixin:
             if skip_replay and None not in (batch_id, done) and batch_id <= done:
                 self._gc(snap)  # merged already; collect its debris
                 return
-            routed = (
+            routed = self._with_part(
                 self._cast_keys_to_stored(batch, snap=snap)
-                .withColumn("__p", self._part_expr())
-                .localCheckpoint(eager=False)
-            )
+            ).localCheckpoint(eager=False)
             touched = sorted(
                 r["__p"] for r in routed.select("__p").distinct().collect()
             )
+            attrs = {"partitions_touched": len(touched)}
             if touched:
-                new = merge(self._read_parts(snap, touched), routed.drop("__p"))
-                self._commit(
-                    snap, new.withColumn("__p", self._part_expr()), touched, batch_id
+                prev = self._read_parts(snap, touched)
+                new = merge(
+                    None if prev is None else self._with_part(prev),
+                    routed,
+                    self._write_tasks(len(touched)),
                 )
+                attrs.update(self._commit(snap, new, touched, batch_id))
+            span = current_span()
+            if span is not None:
+                span.attributes.update(attrs)
 
     # -- reads ---------------------------------------------------------------
 
@@ -658,6 +668,9 @@ class HashPartitionedStateMixin:
             F.xxhash64(*[F.col(c) for c in self.pk_cols]),
             F.lit(n or self.n_partitions),
         ).cast("int")
+
+    def _with_part(self, df: DataFrame) -> DataFrame:
+        return df.withColumn("__p", self._part_expr())
 
     def _existing_parts(self, snap: dict | None = None) -> list[int]:
         snap = snap or self._snapshot()
@@ -862,12 +875,14 @@ class ParquetUpsertSink(HashPartitionedStateMixin):
     production scale paths are Delta/Iceberg MERGE or the executed
     DbApiUpsertSink). A batch
 
-    1. dedupes to the latest LSN per key (batch-sized, once),
-    2. collects the distinct partition ids it touches (bounded by
-       ``n_partitions``, never by data),
-    3. reads ONLY the touched partitions of the committed snapshot,
-    4. runs ``merge_upsert`` against that slice and commits the
-       rewritten partitions as one new manifest version.
+    1. routes its rows by key hash and collects the distinct partition
+       ids it touches (bounded by ``n_partitions``, never by data),
+    2. reads ONLY the touched partitions of the committed snapshot,
+    3. shuffles stored ∪ batch on the partition id into one task per
+       touched partition, at most one per core, and runs
+       ``merge_upsert``'s one window there (dedupe and LSN guard),
+    4. writes from that same exchange, one file per touched partition,
+       and commits the rewritten partitions as one new manifest version.
 
     This flat sink keeps the whole table in one partition, so a batch
     rewrites O(table). A reader sees the whole batch or none of it. The
@@ -877,24 +892,12 @@ class ParquetUpsertSink(HashPartitionedStateMixin):
 
     span_name = "cdc_apply_batch"
 
-    # Subclasses whose batches are one-row-per-key BY CONSTRUCTION
-    # (e.g. DiversitySampleSink's fold output) set this True to skip
-    # the within-batch latest-per-key window — one shuffle fewer per
-    # batch; latest_per_key over already-unique keys is the identity,
-    # so the merge result is unchanged.
-    _batch_preduplicated: bool = False
-
     def _apply(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
-        reduced = (
-            batch_df
-            if self._batch_preduplicated
-            else latest_per_key(batch_df, self.pk_cols, self.lsn_col)
-        )
         self._merge_batch(
-            reduced,
+            batch_df,
             batch_id,
-            lambda prev, changes: merge_upsert(
-                prev, changes, self.pk_cols, self.lsn_col, assume_deduped=True
+            lambda prev, changes, k: merge_upsert(
+                prev, changes, self.pk_cols, self.lsn_col, partition=("__p", k)
             ),
         )
 
@@ -956,13 +959,10 @@ class TransactionalParquetUpsertSink(ParquetUpsertSink):
         self.pending_dir = pending_dir or f"{target_dir}__txn_pending"
 
     def _pending_generations(self) -> list[tuple[int, str]]:
-        import glob
-        import re as _re
-
         out = []
         # anchored on the full spool prefix: a half-written __wtmp_* dir
         # (or any other sibling) can never parse as a generation
-        pat = _re.compile(_re.escape(self.pending_dir) + r"_b(-?\d+)")
+        pat = re.compile(re.escape(self.pending_dir) + r"_b(-?\d+)")
         for p in glob.glob(f"{self.pending_dir}_b*"):
             m = pat.fullmatch(p)
             if m:
@@ -978,8 +978,6 @@ class TransactionalParquetUpsertSink(ParquetUpsertSink):
         return self.spark.read.parquet(gens[-1])
 
     def _write_pending(self, batch_id: int, df: DataFrame) -> None:
-        import glob
-
         gen = f"{self.pending_dir}_b{batch_id}"
         # tmp name deliberately cannot match the generation pattern
         tmp = f"{self.pending_dir}__wtmp_{uuid.uuid4().hex[:8]}"

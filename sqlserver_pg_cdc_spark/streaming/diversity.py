@@ -66,11 +66,6 @@ class DiversitySampleSink(PartitionedParquetUpsertSink):
 
     _PARAMS_FILE = "__diversity_params.json"
     _CENTROIDS_DIR = "__centroids"
-    # the fold's upsert rows are one-per-doc BY CONSTRUCTION (cand is
-    # window-deduped, sel keeps one ranked row per doc, fresh/evicted
-    # are disjoint doc sets), so the upsert's latest-per-key window is
-    # the identity — skip its shuffle (streaming/apply.py seam)
-    _batch_preduplicated = True
 
     def __init__(
         self,

@@ -71,8 +71,8 @@ class ContinuousAggSink(HashPartitionedStateMixin):
         self._merge_batch(
             build_state(proj, self.pk_cols, self.value_col),
             batch_id,
-            lambda prev, delta: merge_states(
-                [delta] if prev is None else [delta, prev], self.pk_cols
+            lambda prev, delta, _k: merge_states(
+                [delta] if prev is None else [delta, prev], ["__p", *self.pk_cols]
             ),
             skip_replay=self.idempotent,
         )
@@ -132,7 +132,8 @@ class CmsSink(HashPartitionedStateMixin):
         self._merge_batch(
             cms_build(proj, self.item_col, self.d, self.w),
             batch_id,
-            lambda prev, delta: delta if prev is None else cms_merge([prev, delta]),
+            lambda prev, delta, _k: delta if prev is None
+            else self._with_part(cms_merge([prev, delta])),
             skip_replay=self.idempotent,
         )
 

@@ -218,7 +218,7 @@ class Scd2ParquetSink(HashPartitionedStateMixin):
         self._merge_batch(
             batch_df,
             batch_id,
-            lambda prev, batch: scd2_apply(
+            lambda prev, batch, _k: scd2_apply(
                 prev, batch, self.pk_cols, lsn_col=self.lsn_col, op_col=self.op_col
             ),
         )

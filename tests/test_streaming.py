@@ -202,6 +202,19 @@ def test_merge_upsert_null_key_is_null_safe(spark):
     assert rows2 == rows
 
 
+def test_merge_upsert_null_lsn_keeps_one_row_per_key(spark):
+    """A stored and an incoming row of one key that both carry a NULL
+    LSN make one row, not two: the batch row wins the tie, and a later
+    NULL-LSN batch replaces it again rather than matching every stored
+    copy."""
+    schema = "id long, name string, lsn long"
+    state = merge_upsert(None, spark.createDataFrame([(1, "a", None)], schema), ["id"])
+    state = merge_upsert(state, spark.createDataFrame([(1, "a2", None)], schema), ["id"])
+    assert [tuple(r) for r in state.collect()] == [(1, "a2", None)]
+    state = merge_upsert(state, spark.createDataFrame([(1, "a3", None)], schema), ["id"])
+    assert [tuple(r) for r in state.collect()] == [(1, "a3", None)]
+
+
 def test_latest_per_key_composite(spark):
     df = spark.createDataFrame(
         [(1, 10, 1, "x"), (1, 10, 3, "y"), (1, 11, 2, "z")],

@@ -112,6 +112,33 @@ def test_reconcile_table_emits_phase_spans(spark):
     tr.clear()
 
 
+def test_upsert_batch_span_carries_commit_attributes(spark, tmp_path):
+    """Each upsert batch's span names the partitions it touched, the
+    manifest version it committed and the files it wrote (one per
+    touched partition)."""
+    from sqlserver_pg_cdc_spark.streaming.apply import (
+        PartitionedParquetUpsertSink,
+        read_manifest,
+    )
+
+    tr = get_tracer()
+    tr.clear()
+    d = str(tmp_path / "st")
+    sink = PartitionedParquetUpsertSink(spark, d, ["id"], n_partitions=8)
+    schema = "id long, name string, lsn long"
+    sink(spark.createDataFrame([(i, "a", 1) for i in range(40)], schema), 0)
+    sink(spark.createDataFrame([(3, "b", 2), (5, "b", 2)], schema), 1)
+    spans = [json.loads(line) for line in tr.export_json_lines()]
+    attrs = [s["attributes"] for s in spans if s["name"] == "cdc_apply_batch"]
+    assert [a["batch_id"] for a in attrs] == [0, 1]
+    assert [a["version"] for a in attrs] == [0, 1]
+    assert attrs[0]["partitions_touched"] == len(read_manifest(d)["parts"]) > 2
+    assert 1 <= attrs[1]["partitions_touched"] <= 2
+    for a in attrs:
+        assert a["files_written"] == a["partitions_touched"]
+    tr.clear()
+
+
 # --- OTLP/HTTP wire export ---------------------------------------------------
 
 
