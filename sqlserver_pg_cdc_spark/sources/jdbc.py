@@ -311,8 +311,10 @@ class _PartitionScd2Writer:
             # replay-idempotent version insert: a (key, lsn) already in
             # the history is skipped BEFORE any interval surgery; the
             # row_number dedupes within-batch duplicates the transport
-            # may re-deliver. Validity is provisional (open) — the
-            # recompute below fixes every affected chain.
+            # may re-deliver. LSNs compare NULL-safe, as keys do, so a
+            # NULL-LSN version replays as a no-op. Validity is
+            # provisional (open) — the recompute below fixes every
+            # affected chain.
             con.execute(
                 f"INSERT INTO {t} ({biz}, __lsn, __is_delete, "
                 f"__valid_from_lsn, __valid_to_lsn, __active) "
@@ -322,14 +324,16 @@ class _PartitionScd2Writer:
                 f"    PARTITION BY {keys}, __lsn ORDER BY __lsn) AS __rn"
                 f"  FROM __scd2_batch) b "
                 f"WHERE __rn = 1 AND NOT EXISTS ("
-                f"  SELECT 1 FROM {t} h WHERE {key_hb} AND h.__lsn = b.__lsn)"
+                f"  SELECT 1 FROM {t} h WHERE {key_hb}"
+                f"  AND h.__lsn IS NOT DISTINCT FROM b.__lsn)"
             )
             # validity-chain recompute for AFFECTED keys only (the keys
             # present in the batch): each version closes at the next
             # version's LSN; the last stays open and is active unless it
             # is a delete tombstone. Handles out-of-order LSN arrivals
             # by construction — the chain is rebuilt from the stored
-            # set, not patched incrementally.
+            # set, not patched incrementally. A NULL LSN sorts first,
+            # as in `scd2_apply`.
             con.execute(
                 f"UPDATE {t} SET "
                 f"  __valid_to_lsn = n.__next_lsn, "
@@ -337,12 +341,13 @@ class _PartitionScd2Writer:
                 f"              AND NOT {t}.__is_delete) "
                 f"FROM ("
                 f"  SELECT {keys}, __lsn, COALESCE("
-                f"    LEAD(__lsn) OVER (PARTITION BY {keys} ORDER BY __lsn), "
+                f"    LEAD(__lsn) OVER ("
+                f"      PARTITION BY {keys} ORDER BY __lsn NULLS FIRST), "
                 f"    {self.open_lsn}) AS __next_lsn "
                 f"  FROM {t} "
                 f"  WHERE EXISTS (SELECT 1 FROM __scd2_batch b WHERE {key_tb})"
                 f") n "
-                f"WHERE {key_tn} AND {t}.__lsn = n.__lsn"
+                f"WHERE {key_tn} AND {t}.__lsn IS NOT DISTINCT FROM n.__lsn"
             )
             con.execute("DROP TABLE __scd2_batch")
             con.execute("COMMIT")
@@ -364,13 +369,18 @@ class DbApiScd2Sink:
     statement shapes).
 
     Semantics match `streaming/scd2.scd2_apply` exactly (the parquet
-    history sink's contract): every change event becomes a version row
-    with a validity interval; a new version closes its predecessor; a
-    delete closes the chain without an active successor; replays are
-    idempotent by (key, LSN); out-of-order LSNs converge because the
-    affected chains are RECOMPUTED set-based (one windowed UPDATE), not
-    patched. The whole batch applies in ONE transaction — close current
-    version + insert new versions atomically.
+    history sink's contract, pinned by ``tests/test_scd2_fold.py``):
+    every change event becomes a version row with a validity interval;
+    a new version closes its predecessor; a delete closes the chain
+    without an active successor; one version is kept per (key, LSN),
+    compared NULL-safe, so replays and in-batch duplicates are no-ops;
+    out-of-order LSNs converge because the affected chains are
+    RECOMPUTED set-based (one windowed UPDATE ordered as ``scd2_apply``'s
+    ``lead`` window, a NULL LSN first), not patched. Where the parquet
+    apply rebuilds every chain of the partitions a batch touches, this
+    sink updates only the chains of the batch's keys; the others would
+    come out unchanged. The whole batch applies in ONE transaction —
+    close current version + insert new versions atomically.
 
     The history table must exist with columns: the business columns plus
     ``__lsn BIGINT, __is_delete BOOLEAN, __valid_from_lsn BIGINT,

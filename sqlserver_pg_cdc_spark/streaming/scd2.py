@@ -15,14 +15,20 @@ history table in the classic slowly-changing-dimension-type-2 shape:
 - within a batch, versions apply in LSN order (every intermediate
   version is preserved — not just the batch's last, which is what the
   upsert sink's latest-per-key dedup would keep);
-- replays are idempotent: a version whose (key, LSN) already exists in
-  the history is skipped before any interval surgery.
+- replays are idempotent: a version whose (key, LSN) the history
+  already holds is dropped, and so is a duplicate within the batch (a
+  transport re-delivery); a NULL LSN is one LSN value like any other.
 
-Scale: one groupBy/window per batch keyed on the PK over (history's
-AFFECTED keys + batch) — the history is first semi-joined down to keys
-present in the batch, so the rewrite touches O(changed keys × their
-versions), not O(history).  The final merge is a union + window
-recomputation of validity chains for affected keys only.
+Scale: one shuffle and one sort per batch. The stored versions (tag 0)
+and the batch's (tag 1) are unioned, and two windows over the same
+key partitions do all of the work: ``row_number() OVER (PARTITION BY
+key, __lsn ORDER BY tag)`` keeps one version per (key, LSN), the stored
+one first, and ``lead(__lsn) OVER (PARTITION BY key ORDER BY __lsn)``
+rebuilds every chain. The sinks feed it only the hash partitions a
+batch touches, so the rewrite is O(batch + touched partitions), never
+O(history); chains of keys the batch does not touch come out as they
+were stored (``lead`` looks only forward, and retention only drops a
+chain's prefix).
 """
 
 from __future__ import annotations
@@ -30,9 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sqlserver_pg_cdc_spark.streaming.apply import HashPartitionedStateMixin
+from sqlserver_pg_cdc_spark.streaming.apply import (
+    HashPartitionedStateMixin,
+    align_evolved_sides,
+)
 
 OPEN_LSN = (1 << 62)  # sentinel for "still active"; larger than any real LSN
+CHAIN_COLS = ["__valid_from_lsn", "__valid_to_lsn", "__active"]
 
 
 def scd2_apply(
@@ -42,6 +52,7 @@ def scd2_apply(
     lsn_col: str = "lsn",
     op_col: str = "op",
     delete_op: str = "d",
+    partition: tuple[str, int] | None = None,
 ) -> DataFrame:
     """Apply one CDC batch to an SCD2 history frame and return the new
     history.  ``history`` of None means an empty history (bootstrap).
@@ -51,111 +62,69 @@ def scd2_apply(
     are represented in the history as a tombstone version (NULL business
     columns are fine) that immediately closes — its only effect is
     closing the predecessor.
-    """
-    biz = [c for c in batch.columns if c not in (lsn_col, op_col)]
+
+    ``partition=(col, k)`` has :func:`merge_upsert`'s contract: both
+    sides carry ``col``, a function of the key; the union is shuffled on
+    it into ``k`` tasks and both windows partition by ``(col, *pk)``, so
+    a write that repartitions the result by ``col`` into ``k`` tasks
+    reuses this exchange. Without it the union is shuffled on the key.
+
+    Additive schema drift is evolved in place (:func:`align_evolved_sides`);
+    a type change raises and the sink DLQs the batch. Keys and LSNs
+    group NULL-safe, as a window partitions NULLs together; a NULL LSN
+    sorts first in its chain."""
     versions = batch.select(
-        *[F.col(c) for c in biz],
+        *[c for c in batch.columns if c not in (lsn_col, op_col)],
         F.col(lsn_col).cast("long").alias("__lsn"),
         (F.col(op_col) == delete_op).alias("__is_delete"),
     )
     if history is not None:
-        # additive schema evolution (reference auto.evolve): a batch that
-        # GAINED a column widens the history (old versions read NULL); a
-        # batch LACKING a history column gets typed NULLs (old-shape
-        # producer / upstream drop the sink keeps). Type changes raise —
-        # the sink's error path DLQs the batch.
-        from pyspark.sql import types as T
-
-        from sqlserver_pg_cdc_spark.operators.evolution import diff_schemas
-
-        meta_cols = {
-            "__lsn", "__is_delete", "__valid_from_lsn",
-            "__valid_to_lsn", "__active",
-        }
-        hist_biz = T.StructType(
-            [f for f in history.schema.fields if f.name not in meta_cols]
-        )
-        batch_biz = T.StructType(
-            [f for f in versions.schema.fields if f.name not in meta_cols]
-        )
-        d = diff_schemas(hist_biz, batch_biz)
-        if d.type_changed:
-            raise ValueError(
-                f"incompatible schema change (type): {d.type_changed} — "
-                "additive evolution only; route this batch to the DLQ"
-            )
-        for name, _ in d.added:
-            history = history.withColumn(
-                name, F.lit(None).cast(batch_biz[name].dataType)
-            )
-        for name, _ in d.removed:
-            versions = versions.withColumn(
-                name, F.lit(None).cast(hist_biz[name].dataType)
-            )
-        biz = [f.name for f in hist_biz.fields] + [n for n, _ in d.added]
+        history, versions = align_evolved_sides(history.drop(*CHAIN_COLS), versions)
+    biz = [c for c in versions.columns if c not in ("__lsn", "__is_delete")]
+    both = versions.withColumn("__tag", F.lit(1))
     if history is not None:
-        # NULL-SAFE key matching throughout: the window recomputation
-        # below groups NULL keys into one partition (SQL semantics), so
-        # the semi/anti split must too — with plain equality a NULL-key
-        # chain would never be "affected", leaving two open versions
-        # after a cross-batch update. <=> keys still hash-join.
-        keys = versions.select(*pk_cols).distinct()
-
-        def _key_cond(left, right):
-            cond = None
-            for c in pk_cols:
-                term = left[c].eqNullSafe(right[c])
-                cond = term if cond is None else (cond & term)
-            return cond
-
-        h = history.alias("__h")
-        k = keys.alias("__k")
-        affected = h.join(k, _key_cond(h, k), "left_semi")
-        untouched = h.join(k, _key_cond(h, k), "left_anti")
-        # idempotent replay: drop batch versions already in the history
-        seen = affected.select(*pk_cols, "__lsn").alias("__s")
-        v = versions.alias("__v")
-        versions = v.join(
-            seen,
-            _key_cond(v, seen) & (v["__lsn"] == seen["__lsn"]),
-            "left_anti",
-        )
-        merged = affected.select(
-            *[F.col(c) for c in biz], "__lsn", F.col("__is_delete")
-        ).unionByName(versions)
+        both = history.withColumn("__tag", F.lit(0)).unionByName(both)
+    keys = list(pk_cols)
+    if partition is not None:
+        col, k = partition
+        both, keys = both.repartition(k, col), [col, *keys]
     else:
-        untouched = None
-        merged = versions
-    # recompute validity chains for the affected keys: order versions by
-    # LSN, each closes at the next version's LSN (or stays open)
-    w = Window.partitionBy(*pk_cols).orderBy(F.col("__lsn").asc())
-    next_lsn = F.lead("__lsn").over(w)
-    rebuilt = merged.select(
-        *[F.col(c) for c in biz],
-        "__lsn",
-        "__is_delete",
-        F.col("__lsn").alias("__valid_from_lsn"),
-        F.coalesce(next_lsn, F.lit(OPEN_LSN)).alias("__valid_to_lsn"),
-    ).withColumn(
-        "__active",
-        (F.col("__valid_to_lsn") == OPEN_LSN) & ~F.col("__is_delete"),
+        # left to itself, the first window would shuffle on (key, LSN)
+        # and the second again on the key
+        both = both.repartition(*keys)
+    first = Window.partitionBy(*keys, "__lsn").orderBy("__tag")
+    valid_to = F.coalesce(
+        F.lead("__lsn").over(Window.partitionBy(*keys).orderBy("__lsn")),
+        F.lit(OPEN_LSN),
     )
-    if untouched is not None:
-        rebuilt = rebuilt.unionByName(untouched)
-    return rebuilt
+    return (
+        both.withColumn("__rn", F.row_number().over(first))
+        .filter(F.col("__rn") == 1)
+        .select(
+            *biz,
+            "__lsn",
+            "__is_delete",
+            F.col("__lsn").alias("__valid_from_lsn"),
+            valid_to.alias("__valid_to_lsn"),
+        )
+        .withColumn(
+            "__active",
+            (F.col("__valid_to_lsn") == OPEN_LSN) & ~F.col("__is_delete"),
+        )
+    )
 
 
 def current_view(history: DataFrame) -> DataFrame:
     """The upsert-equivalent projection: the single active version per
     key (deleted keys absent)."""
-    drop = ["__lsn", "__is_delete", "__valid_from_lsn", "__valid_to_lsn", "__active"]
+    drop = ["__lsn", "__is_delete", *CHAIN_COLS]
     return history.filter(F.col("__active")).drop(*drop)
 
 
 def as_of_lsn(history: DataFrame, lsn: int) -> DataFrame:
     """Time travel: the table as it stood at ``lsn`` (versions whose
     validity interval contains it, deletes excluded)."""
-    drop = ["__lsn", "__is_delete", "__valid_from_lsn", "__valid_to_lsn", "__active"]
+    drop = ["__lsn", "__is_delete", *CHAIN_COLS]
     return history.filter(
         (F.col("__valid_from_lsn") <= lsn)
         & (F.col("__valid_to_lsn") > lsn)
@@ -174,14 +143,15 @@ class Scd2ParquetSink(HashPartitionedStateMixin):
 
     The batch frame must carry the business columns + (lsn, op) the
     unwrap stage produces. A batch routes its rows by PK hash, reads the
-    partitions it touches, runs :func:`scd2_apply` against that slice —
-    the apply step confines version-chain surgery to the batch's keys,
-    and every key in the slice hashes back into a touched partition —
-    and commits them as one new manifest version, so a reader sees the
-    whole batch or none of it. The manifest records the batch id, but
-    replay is not skipped on it: ``scd2_apply`` drops batch versions
-    whose (key, LSN) the history already holds, so a batch re-driven
-    after a crash on either side of the commit converges.
+    partitions it touches, shuffles their versions ∪ the batch's on the
+    partition id into the commit's write tasks, runs
+    :func:`scd2_apply`'s two windows there (every chain of the slice is
+    rebuilt; untouched ones come out as stored) and writes from that same
+    exchange, committing the rewritten partitions as one new manifest
+    version, so a reader sees the whole batch or none of it. The
+    manifest records the batch id, but replay is not skipped on it:
+    ``scd2_apply`` keeps the stored copy of every (key, LSN), so a batch
+    re-driven after a crash on either side of the commit converges.
     """
 
     span_name = "scd2_apply_batch"
@@ -218,8 +188,9 @@ class Scd2ParquetSink(HashPartitionedStateMixin):
         self._merge_batch(
             batch_df,
             batch_id,
-            lambda prev, batch, _k: scd2_apply(
-                prev, batch, self.pk_cols, lsn_col=self.lsn_col, op_col=self.op_col
+            lambda prev, batch, k: scd2_apply(
+                prev, batch, self.pk_cols, lsn_col=self.lsn_col,
+                op_col=self.op_col, partition=("__p", k),
             ),
         )
 

@@ -173,3 +173,22 @@ def test_identifier_validation():
         DbApiScd2Sink(lambda: None, "hist; DROP TABLE x", ["id"])
     with pytest.raises(ValueError):
         DbApiScd2Sink(lambda: None, "hist", ["bad-col"])
+
+
+def test_null_lsn_version_replays_idempotent(spark, tmp_path):
+    """A NULL-LSN version matches its replay (LSNs compare NULL-safe,
+    as in `scd2_apply`): three replays leave one version of key 1, open
+    and active."""
+    db = str(tmp_path / "t.db")
+    _mk_target(db)
+    sink = _mk_sink(db)
+    b = spark.createDataFrame(
+        [(1, "a", 1.0, None, "c"), (2, "b", 2.0, 5, "c")], COLS
+    )
+    for i in range(4):
+        sink(b, i)
+    got = _db_hist(db)
+    assert got == _spark_hist(scd2_apply(None, b, ["id"]))
+    assert [r for r in got if r[0] == 1] == [
+        (1, "a", 1.0, None, False, None, OPEN_LSN, True)
+    ]

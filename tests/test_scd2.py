@@ -64,8 +64,8 @@ def test_replay_is_idempotent(spark, history):
 
 def test_untouched_keys_not_rewritten(spark, history):
     """A batch touching only id 3 must leave id 1/2 version rows
-    byte-identical (the semi/anti split keeps the rewrite O(changed
-    keys))."""
+    byte-identical (their chains are rebuilt from the stored versions
+    and come out as stored)."""
     b = spark.createDataFrame([(3, "carola", 50, "u")], SCHEMA)
     h2 = scd2_apply(history, b, ["id"])
     before = {tuple(r) for r in history.filter("id != 3").collect()}
@@ -327,3 +327,28 @@ def test_partitioned_scd2_point_lookup(spark, tmp_path):
         (r["__lsn"], r["name"]) for r in part.history_for_keys([7]).collect()
     )
     assert chain == [(17, "n7"), (100, "v2")]
+
+
+def test_duplicate_within_batch_makes_no_zero_length_version(spark):
+    """A transport re-delivery inside one batch is one version, not a
+    version that closes at its own LSN."""
+    b = spark.createDataFrame(
+        [(1, "a", 1, "c"), (1, "a", 1, "c"), (1, "a2", 3, "u")], SCHEMA
+    )
+    chains = sorted(
+        (r["__lsn"], r["__valid_to_lsn"])
+        for r in scd2_apply(None, b, ["id"]).collect()
+    )
+    assert chains == [(1, 3), (3, OPEN_LSN)]
+
+
+def test_null_lsn_version_replays_idempotent(spark):
+    """A version with a NULL LSN is one (key, LSN) like any other: a
+    replay of its batch adds nothing, and the key keeps one active
+    version."""
+    b = spark.createDataFrame([(1, "a", None, "c"), (2, "b", 5, "c")], SCHEMA)
+    h = scd2_apply(None, b, ["id"])
+    for _ in range(3):
+        h = scd2_apply(h, b, ["id"])
+    assert h.count() == 2
+    assert current_view(h).filter("id = 1").count() == 1
